@@ -40,7 +40,7 @@ def stage_multicast_delta(
     independent of shuffle width.
 
     ``pre_partitioned``: the caller already holds the data hash-distributed
-    by (destination, bucket) and url-sorted (the fused "local" dedup path) —
+    by (destination, bucket) and url-sorted (fused_local_dedup_extract) —
     write directly; each (destination, bucket) group still lives wholly in
     one task, so the one-file-per-group property is preserved without a
     second shuffle.

@@ -6,65 +6,37 @@ and the HL7 `sequencer` field (HL7Message.kt:25). At-least-once delivery means
 exact duplicates (same lsn) and out-of-order arrivals are expected
 (RouteIngestedFile.kt:100-103; CHANGELOG 0.0.41).
 
-Two interchangeable physical strategies (tests assert identical results):
+Two operators, one per caller:
 
-- "agg" (default): groupBy(url).agg(max_by(row, (warc_ts, lsn))). Catalyst
-  plans this as partial hash aggregation, so every map task pre-reduces its
-  own slice of a hot url to ONE row before the shuffle — Zipf-skewed keys
-  never concentrate on a single reducer. This is the built-in equivalent of
-  hand-salting and the preferred plan at 10^10 events.
+- ``fused_local_dedup_extract``: the epoch plan (pipeline.apply_epoch). ONE
+  (dest, bucket) shuffle, a partition-local sort, then adjacency dedup and
+  text extraction together in one ``mapInArrow`` pass whose output is
+  written straight to its partitioned staging layout.
 
-- "window_salted": explicit two-phase salted reduction + window row_number —
-  the classical formulation; kept for parity with engines without map-side
-  combine on max_by and as an explicit skew-handling demonstration.
+- ``dedup_last_writer``: a standalone DataFrame operator,
+  groupBy(key).agg(max_by(row, (warc_ts, lsn))), used by the snapshot
+  bootstrap (operators/bootstrap.py). Catalyst plans it as partial hash
+  aggregation, so every map task pre-reduces its own slice of a hot url to
+  ONE row before the shuffle — Zipf-skewed keys never concentrate on a
+  single reducer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 ORDER_COLS = ("warc_ts", "lsn")
 
 
-def dedup_last_writer(
-    df: DataFrame,
-    key: str | list[str] = "url",
-    strategy: str = "agg",
-    n_salts: int = 32,
-) -> DataFrame:
+def dedup_last_writer(df: DataFrame, key: str | list[str] = "url") -> DataFrame:
+    """Keep the max-(warc_ts, lsn) row per key (map-side-combined max_by)."""
     keys = [key] if isinstance(key, str) else list(key)
-    if strategy == "agg":
-        return _dedup_agg(df, keys)
-    if strategy == "window_salted":
-        return _dedup_window_salted(df, keys, n_salts)
-    raise ValueError(f"unknown dedup strategy: {strategy}")
-
-
-def _ord(df: DataFrame):
-    return F.struct(*[F.col(c) for c in ORDER_COLS])
-
-
-def _dedup_agg(df: DataFrame, keys: list[str]) -> DataFrame:
     cols = df.columns
     row = F.struct(*[F.col(c) for c in cols])
-    out = df.groupBy(*keys).agg(F.max_by(row, _ord(df)).alias("_row"))
+    order = F.struct(*[F.col(c) for c in ORDER_COLS])
+    out = df.groupBy(*keys).agg(F.max_by(row, order).alias("_row"))
     return out.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
-def _dedup_window_salted(df: DataFrame, keys: list[str], n_salts: int) -> DataFrame:
-    """Phase 1: reduce per (key, salt) — hot keys split across n_salts reducers;
-    phase 2: reduce the <=n_salts survivors per key; final row_number window
-    runs on at most n_salts rows per key."""
-    cols = df.columns
-    row = F.struct(*[F.col(c) for c in cols])
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col("lsn"), F.lit(7)), F.lit(n_salts)))
-    phase1 = salted.groupBy(*keys, "_salt").agg(F.max_by(row, _ord(df)).alias("_row"))
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(F.col(f"_row.{ORDER_COLS[0]}")), F.desc(F.col(f"_row.{ORDER_COLS[1]}"))
-    )
-    final = phase1.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
-    return final.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
 
 
 def fused_local_dedup_extract(
@@ -75,34 +47,34 @@ def fused_local_dedup_extract(
     no_dedup_dest: str = "dead_letter",
     engine: str = "arrow",
 ):
-    """Third physical strategy ("local"): ONE shuffle for the whole epoch.
+    """The epoch's dedup + extraction: ONE shuffle for the whole epoch.
 
-    The agg strategy shuffles the full ~KB rows twice — once keyed (dest, url)
-    for the dedup aggregation, once keyed (dest, bucket) for the staged write.
-    But bucket = hash(url) % n determines url's partition, so a single
+    bucket = hash(url) % n determines url's partition, so a single
     (dest, bucket) shuffle co-locates every revision of a url; after a
     partition-local sort (dest, bucket, url, warc_ts DESC, lsn DESC),
     last-writer-wins dedup is adjacency filtering — C-level vector compare in
-    the SAME Arrow pass that text extraction already pays. Net: half the
-    shuffle bytes per epoch and one fewer Arrow round trip.
+    the SAME Arrow pass that text extraction already pays. A separate
+    (dest, url) dedup aggregation would shuffle the full ~KB rows a second
+    time and add an Arrow round trip.
 
     Rows with dest == ``no_dedup_dest`` (dead letters) are never deduplicated
     (at-least-once dead-lettering, like the reference) and keep their meta
-    map; delta rows get meta nulled (parity with the agg path, which drops
-    meta before staging).
+    map; delta rows get meta nulled (the destination schema has no meta
+    column, so the staged files carry no payload for it).
 
     Returns a DataFrame shaped like ``staged_input`` + a ``text`` column
     after ``html``, physically partitioned by (dest, bucket) and url-sorted —
     ready for a direct partitionBy write (pass pre_partitioned=True to
     stage_multicast_delta).
 
-    ``engine="arrow"`` (default, r05 bytes-per-event work) runs the pass via
-    ``mapInArrow``: adjacency keys compare as C-level Arrow kernels instead
-    of numpy str concatenation, non-survivors are dropped by an Arrow
+    ``engine="arrow"`` (default, the one the pipeline runs) runs the pass
+    via ``mapInArrow``: adjacency keys compare as C-level Arrow kernels
+    instead of numpy str concatenation, non-survivors are dropped by an Arrow
     ``filter`` WITHOUT ever becoming Python objects, and survivors' ``html``
     buffers pass straight back to the JVM — only the survivor payloads cross
-    into Python (one ``as_py`` each, for extraction). The pandas engine is
-    kept verbatim for the byte-equivalence gate (tests/test_operators.py).
+    into Python (one ``as_py`` each, for extraction). ``engine="pandas"`` is
+    the reference implementation the arrow engine is gated against
+    (tests/test_operators.py).
     """
     import numpy as np
     import pandas as pd  # noqa: F401
@@ -190,9 +162,9 @@ def fused_local_dedup_extract(
                 [extract_text_py(v.as_py()) for v in html], type=pa.string()
             )
             if "meta" in cols:
-                # delta rows ship meta as null (agg-path parity); only the
-                # (rare) dead-letter rows keep theirs. The common all-delta
-                # batch emits nulls without touching a single Python object.
+                # delta rows ship meta as null; only the (rare) dead-letter
+                # rows keep theirs. The common all-delta batch emits nulls
+                # without touching a single Python object.
                 meta = cols["meta"]
                 dl_surv = is_dl[keep]
                 if not dl_surv.any():
@@ -223,6 +195,4 @@ def fused_local_dedup_extract(
         return arranged.mapInArrow(op_arrow, out_schema)
     if engine == "pandas":
         return arranged.mapInPandas(op, out_schema)
-    # fail loudly: a typo'd engine knob silently measuring the wrong path
-    # would invalidate the very A/B the knob exists for
     raise ValueError(f"unknown fused engine {engine!r} (arrow|pandas)")

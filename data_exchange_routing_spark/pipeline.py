@@ -17,15 +17,12 @@ routeSourceBlobToDestination -> sendProcessingStatus
 Error rows never abort the batch (F12, CHANGELOG 0.0.40) — they divert to the
 dead_letter table with exact error strings.
 
-Scale shape per epoch (default dedup_strategy="local"): one scan of the
-batch, one broadcast join (config ~5 rows), then ONE shuffle keyed
-(destination, bucket) whose partition-local sort makes last-writer-wins
-dedup an adjacency filter inside the same Arrow pass as text extraction,
-and O(batch)-sized delta file writes — per-epoch cost is O(batch),
-independent of table size (merge-on-read lake layer). The "agg" strategy
-(map-side-combined max_by, two shuffles) remains selectable for
-pathological duplicate rates; "window_salted" demonstrates explicit
-salting. All three are final-state-equivalence gated.
+Scale shape per epoch: one scan of the batch, one broadcast join (config
+~5 rows), then ONE shuffle keyed (destination, bucket) whose
+partition-local sort makes last-writer-wins dedup an adjacency filter
+inside the same Arrow pass as text extraction, and O(batch)-sized delta
+file writes written straight from that partitioning — per-epoch cost is
+O(batch), independent of table size (merge-on-read lake layer).
 """
 
 from __future__ import annotations
@@ -41,10 +38,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_exchange_routing_spark import __version__
-from data_exchange_routing_spark.functions.extract import extract_text
 from data_exchange_routing_spark.lake.staging import DEST_COL, stage_multicast_delta
-from data_exchange_routing_spark.lake.table import DELETED_COL, LSN_COL, LakeTable
-from data_exchange_routing_spark.operators.dedup import dedup_last_writer
+from data_exchange_routing_spark.lake.table import (
+    BUCKET_COL,
+    DELETED_COL,
+    LSN_COL,
+    LakeTable,
+)
+from data_exchange_routing_spark.operators.dedup import fused_local_dedup_extract
 from data_exchange_routing_spark.operators.parse import (
     coalesce_routing_keys,
     enrich_meta,
@@ -560,6 +561,11 @@ class Warehouse:
     def _promote_registry_path(self) -> str:
         return os.path.join(self.root, "_checkpoints", "promoted_meta_keys.json")
 
+    def has_promote_registry(self) -> bool:
+        """False only before the first epoch's cold pre-scan; an empty
+        registry file still means "scanned, nothing to promote"."""
+        return os.path.exists(self._promote_registry_path())
+
     def known_promote_keys(self) -> list[str]:
         try:
             with open(self._promote_registry_path()) as f:
@@ -629,7 +635,6 @@ def apply_epoch(
     wh: Warehouse,
     events: DataFrame,
     epoch_id: int,
-    dedup_strategy: str = "local",
     route_config: DataFrame | None = None,
 ) -> dict:
     """Apply one micro-batch of change events. Idempotent: re-running any
@@ -637,8 +642,9 @@ def apply_epoch(
     no-op thanks to per-table epoch guards.
 
     ONE full-batch Spark action per epoch in steady state:
-      1. the fused multicast write: dedup per (destination, url) -> ONE text
-         extraction pass -> ONE shuffle keyed (destination, bucket) -> staged
+      1. the fused multicast write: ONE shuffle keyed (destination, bucket)
+         -> partition-local sort -> last-writer-wins dedup per
+         (destination, url) and text extraction in ONE Arrow pass -> staged
          parquet, with dead-letter rows riding the same write. Promotable
          meta keys come from the warehouse registry; an Observation on the
          write verifies them for free, and only an epoch that introduces a
@@ -665,267 +671,204 @@ def apply_epoch(
     # paying the GC tax — measured 2x on local[32].
     batch = normalize_meta_keys(events)
     batch = coalesce_routing_keys(batch)
-    try:
-        valid, dead_validate = split_valid(batch)
-        # enrichment happens after validation (the reference validates raw
-        # metadata before enriching: RouteIngestedFile.kt:111-146 vs :196-209)
-        valid = enrich_meta(valid, __version__)
-        annotated = annotate_routes(valid, route_config)
-        routed, dead_route = split_routed(annotated)
+    valid, dead_validate = split_valid(batch)
+    # enrichment happens after validation (the reference validates raw
+    # metadata before enriching: RouteIngestedFile.kt:111-146 vs :196-209)
+    valid = enrich_meta(valid, __version__)
+    annotated = annotate_routes(valid, route_config)
+    routed, dead_route = split_routed(annotated)
 
-        dead_all = (
-            dead_validate.unionAll(dead_route)
-            .withColumn(DEST_COL, F.lit("dead_letter"))
-            .withColumn("lsn", F.col("lsn").cast("long"))
-        )
+    dead_all = (
+        dead_validate.unionAll(dead_route)
+        .withColumn(DEST_COL, F.lit("dead_letter"))
+        .withColumn("lsn", F.col("lsn").cast("long"))
+    )
 
-        def build_and_stage(promote: list[str], attempt: int):
-            """Fused multicast delta: one dedup+extract pass for ALL
-            destinations; dead letters ride the SAME staged write under the
-            pseudo-destination 'dead_letter'. Dead letters are NOT
-            deduplicated — at-least-once dead-lettering, like the reference."""
-            obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
-            delta = dedup_last_writer(routed, key=[DEST_COL, "url"], strategy=dedup_strategy)
-            delta = delta.withColumn("text", extract_text(F.col("html")))
-            # distinct meta keys collected DURING the write — no extra pass.
-            # collect_SET of the per-row key-arrays, not collect_list: the
-            # accumulator then carries only the distinct key-combinations
-            # (a handful) instead of one array per row. The list variant
-            # shipped O(rows) arrays to the driver and merged them
-            # single-threaded on the DAGScheduler event loop — measured 8 s
-            # of post-task stage stall per epoch at 406k rows, stalling
-            # every concurrent job; at 10^10 rows it would be a
-            # driver-side O(rows) scale-killer.
-            delta = delta.observe(
-                obs,
-                F.array_distinct(
-                    F.flatten(F.collect_set(F.map_keys(F.col("meta"))))
-                ).alias("keys"),
-            )
-            cols = [
-                F.col(DEST_COL),
-                F.col("url"),
-                F.col("warc_ts"),
-                F.col("html"),
-                F.col("text"),
-                F.col("lang"),
-                F.col("lsn").alias(LSN_COL),
-                (F.col("op") == "D").alias(DELETED_COL),
-            ]
-            for k in promote:
-                cols.append(F.col("meta").getItem(k).alias(k))
-            delta = delta.select(*cols)
-            delta_schema = delta.drop(DEST_COL).schema
-            staged_all = delta.unionByName(dead_all, allowMissingColumns=True)
-            staging = os.path.join(
-                wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}"
-            )
-            _mark_staging_inflight(staging)
-            entries = stage_multicast_delta(staged_all, staging, wh.n_buckets)
-            try:
-                raw = obs.get["keys"] or []
-            except Exception:
-                # an all-empty batch can optimize the CollectMetrics node away
-                # (metrics row then fails Py4J conversion); fall back to the
-                # explicit one-job detection — trivially cheap on such batches
-                raw = detect_promotable_meta_keys(batch)
-            observed = sorted(k for k in raw if k not in STANDARD_META_KEYS)
-            return delta_schema, entries, observed, staging
-
-        def build_and_stage_local(promote: list[str], attempt: int):
-            """Fused one-shuffle variant (dedup_strategy="local"): ONE
-            (dest, bucket) exchange + partition-local sort; last-writer-wins
-            dedup and text extraction happen together in a single Arrow pass
-            (operators/dedup.py:fused_local_dedup_extract); the write needs
-            no second repartition. Halves per-epoch shuffle bytes vs agg."""
-            from data_exchange_routing_spark.lake.table import BUCKET_COL
-            from data_exchange_routing_spark.operators.dedup import (
-                fused_local_dedup_extract,
-            )
-
-            obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
-            cols = [
-                F.col(DEST_COL),
-                F.col("url"),
-                F.col("warc_ts"),
-                F.col("html"),
-                F.col("lang"),
-                F.col("lsn").alias(LSN_COL),
-                (F.col("op") == "D").alias(DELETED_COL),
-            ]
-            for k in promote:
-                cols.append(F.col("meta").getItem(k).alias(k))
-            # meta rides along for the observation + dead-letter rows; the
-            # fused op nulls it for delta rows (agg-path parity)
-            cols.append(F.col("meta"))
-            delta0 = routed.select(*cols)
-            staged_input = delta0.unionByName(dead_all, allowMissingColumns=True)
-            # observed pre-dedup here (vs post-dedup in the agg path): a
-            # superset only when a dropped duplicate carried a key its
-            # surviving revision lacks — harmless (extra all-null column)
-            # collect_SET, not collect_list — see the agg-path comment: the
-            # set dedups to the distinct key-combinations executor-side, so
-            # the driver merge is O(combos) not O(rows)
-            staged_input = staged_input.observe(
-                obs,
-                F.array_distinct(
-                    F.flatten(
-                        F.collect_set(
-                            F.when(
-                                F.col(DEST_COL) != "dead_letter",
-                                F.map_keys(F.col("meta")),
-                            )
+    def build_and_stage(promote: list[str], attempt: int):
+        """Fused multicast delta: ONE (dest, bucket) exchange +
+        partition-local sort; last-writer-wins dedup and text extraction
+        happen together in a single Arrow pass
+        (operators/dedup.py:fused_local_dedup_extract), and the write needs
+        no second repartition. Dead letters ride the SAME staged write
+        under the pseudo-destination 'dead_letter' and are NOT
+        deduplicated — at-least-once dead-lettering, like the reference."""
+        obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
+        cols = [
+            F.col(DEST_COL),
+            F.col("url"),
+            F.col("warc_ts"),
+            F.col("html"),
+            F.col("lang"),
+            F.col("lsn").alias(LSN_COL),
+            (F.col("op") == "D").alias(DELETED_COL),
+        ]
+        for k in promote:
+            cols.append(F.col("meta").getItem(k).alias(k))
+        # meta rides along for the observation + dead-letter rows; the
+        # fused op nulls it for delta rows
+        cols.append(F.col("meta"))
+        delta0 = routed.select(*cols)
+        staged_input = delta0.unionByName(dead_all, allowMissingColumns=True)
+        # distinct meta keys collected DURING the write — no extra pass.
+        # Observed pre-dedup: a superset only when a dropped duplicate
+        # carried a key its surviving revision lacks — harmless (extra
+        # all-null column). collect_SET of the per-row key-arrays, not
+        # collect_list: the set dedups to the distinct key-combinations
+        # executor-side, so the driver merge is O(combos) not O(rows). The
+        # list variant shipped one array per row to the driver and merged
+        # them single-threaded on the DAGScheduler event loop — measured
+        # 8 s of post-task stage stall per epoch at 406k rows.
+        staged_input = staged_input.observe(
+            obs,
+            F.array_distinct(
+                F.flatten(
+                    F.collect_set(
+                        F.when(
+                            F.col(DEST_COL) != "dead_letter",
+                            F.map_keys(F.col("meta")),
                         )
                     )
-                ).alias("keys"),
-            )
-            fused = fused_local_dedup_extract(
-                staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL,
-                # arrow engine is the default (equivalence-gated); the env
-                # knob exists for the bytes-per-event A/B protocol only
-                engine=os.environ.get("SPARK_GRAFT_FUSED_ENGINE", "arrow"),
-            )
-            keep = {"url", "warc_ts", "html", "text", "lang", LSN_COL, DELETED_COL} | set(
-                promote
-            )
-            delta_schema = T.StructType([f for f in fused.schema.fields if f.name in keep])
-            staging = os.path.join(
-                wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}"
-            )
-            _mark_staging_inflight(staging)
-            entries = stage_multicast_delta(
-                fused, staging, wh.n_buckets, pre_partitioned=True
-            )
-            try:
-                raw = obs.get["keys"] or []
-            except Exception:
-                raw = detect_promotable_meta_keys(batch)
-            observed = sorted(k for k in raw if k not in STANDARD_META_KEYS)
-            return delta_schema, entries, observed, staging
-
-        if dedup_strategy == "local":
-            build_and_stage = build_and_stage_local
-
-        promote = wh.known_promote_keys()
-        if not promote:
-            # Cold registry (fresh warehouse): ONE cheap pre-scan of the
-            # routed batch's meta keys (map_keys + distinct — html is pruned
-            # from the scan, no payload shuffle) seeds the registry up
-            # front. Without it the epoch observes every key as
-            # never-before-seen and pays the FULL second staging pass
-            # (re-parse + re-shuffle + re-extract of the whole batch). The
-            # scan covers `routed` (post-enrichment/post-routing, where
-            # route-config metadata lands) pre-dedup — the same key set the
-            # local-path Observation measures; the pre- vs post-dedup
-            # difference is the documented harmless superset (a key carried
-            # only by dropped duplicates yields an extra nullable column).
-            # Steady state (non-empty registry) never runs this scan; a
-            # genuinely-new key arriving on a warm registry still takes the
-            # second-pass path below.
-            seed = detect_promotable_meta_keys(routed)
-            if seed:
-                promote = wh.register_promote_keys(seed)
-        delta_schema, entries_by_dest, observed, staging = build_and_stage(promote, 0)
-        new_keys = [k for k in observed if k not in promote]
-        if new_keys:
-            # rare: this epoch introduces brand-new meta keys — register them
-            # and re-stage once so their values land as top-level columns
-            promote = wh.register_promote_keys(observed)
-            shutil.rmtree(staging, ignore_errors=True)
-            _clear_staging_inflight(staging)
-            delta_schema, entries_by_dest, _, staging = build_and_stage(promote, 1)
-
-        # staging is complete; commits start now — refresh the in-flight
-        # marker so the vacuum age gate sees activity even after a
-        # longer-than-min_age_s staging write
-        _touch_staging_inflight(staging)
-
-        stats: dict = {
-            "epoch_id": epoch_id,
-            "destinations": {},
-            "promoted_columns": promote,
-        }
-
-        lineage_rows = []
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        start = datetime.fromtimestamp(t0, timezone.utc).replace(tzinfo=None)
-
-        def commit_dead_letter():
-            dl = wh.table("dead_letter")
-            dl_entries = [
-                dict(e, path=os.path.relpath(e["path"], dl.path))
-                for e in entries_by_dest.get("dead_letter", [])
-            ]
-            dl.commit_staged_files(
-                dl_entries, DEAD_LETTER, epoch_id=epoch_id, source="dead_letter"
-            )
-
-        def commit_dest(dest: str):
-            table = wh.table(dest)
-            entries = [
-                dict(e, path=os.path.relpath(e["path"], table.path))
-                for e in entries_by_dest.get(dest, [])
-            ]
-            res = table.commit_staged_files(
-                entries, delta_schema, epoch_id=epoch_id, source="cdc"
-            )
-            return dest, entries, res
-
-        # destination tables are independent — commit them concurrently to
-        # cut the epoch's serial driver floor (VERDICT r01 item 4)
-        dests = sorted(set(DESTINATION_TABLES))
-        with ThreadPoolExecutor(max_workers=1 + len(dests)) as ex:
-            dl_future = ex.submit(commit_dead_letter)
-            for dest, entries, res in ex.map(commit_dest, dests):
-                stats["destinations"][dest] = res
-                for e in entries:
-                    lineage_rows.append(
-                        (
-                            epoch_id,
-                            e["bucket"],
-                            dest,
-                            e["rows"],
-                            e["bytes"],
-                            datetime.fromisoformat(e["ts_max"]) if e["ts_max"] else None,
-                            "SUCCESS",
-                            None,
-                            start,
-                            now,
-                        )
-                    )
-            dl_future.result()
-
-        for e in entries_by_dest.get("dead_letter", []):
-            lineage_rows.append(
-                (
-                    epoch_id,
-                    e["bucket"],
-                    "dead_letter",
-                    e["rows"],
-                    e["bytes"],
-                    datetime.fromisoformat(e["ts_max"]) if e["ts_max"] else None,
-                    "FAILURE",
-                    None,
-                    start,
-                    now,
                 )
-            )
-
-        # lineage rows are computed on the driver (footer stats): driver-side
-        # parquet write + metadata-only commit, zero Spark jobs
-        wh.table("lineage_metrics").append_rows(
-            lineage_rows, LINEAGE_METRICS, epoch_id=epoch_id, source="lineage"
+            ).alias("keys"),
         )
+        fused = fused_local_dedup_extract(
+            staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL
+        )
+        keep = {"url", "warc_ts", "html", "text", "lang", LSN_COL, DELETED_COL} | set(
+            promote
+        )
+        delta_schema = T.StructType([f for f in fused.schema.fields if f.name in keep])
+        staging = os.path.join(
+            wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}"
+        )
+        _mark_staging_inflight(staging)
+        entries = stage_multicast_delta(
+            fused, staging, wh.n_buckets, pre_partitioned=True
+        )
+        try:
+            raw = obs.get["keys"] or []
+        except Exception:
+            # an all-empty batch can optimize the CollectMetrics node away
+            # (metrics row then fails Py4J conversion); fall back to the
+            # explicit one-job detection — trivially cheap on such batches
+            raw = detect_promotable_meta_keys(batch)
+        observed = sorted(k for k in raw if k not in STANDARD_META_KEYS)
+        return delta_schema, entries, observed, staging
+
+    if wh.has_promote_registry():
+        promote = wh.known_promote_keys()
+    else:
+        # Cold registry (fresh warehouse): ONE cheap pre-scan of the
+        # routed batch's meta keys (map_keys + distinct — html is pruned
+        # from the scan, no payload shuffle) seeds the registry up
+        # front. Without it the epoch observes every key as
+        # never-before-seen and pays the FULL second staging pass
+        # (re-parse + re-shuffle + re-extract of the whole batch). The
+        # scan covers `routed` (post-enrichment/post-routing, where
+        # route-config metadata lands) pre-dedup — the same key set the
+        # staging Observation measures. The registry file is written even
+        # when the seed is empty, so the scan runs only until the first
+        # epoch has written the registry; a genuinely-new key arriving
+        # later still takes the second-pass path below.
+        promote = wh.register_promote_keys(detect_promotable_meta_keys(routed))
+    delta_schema, entries_by_dest, observed, staging = build_and_stage(promote, 0)
+    new_keys = [k for k in observed if k not in promote]
+    if new_keys:
+        # rare: this epoch introduces brand-new meta keys — register them
+        # and re-stage once so their values land as top-level columns
+        promote = wh.register_promote_keys(observed)
+        shutil.rmtree(staging, ignore_errors=True)
         _clear_staging_inflight(staging)
-        return stats
-    finally:
-        pass
+        delta_schema, entries_by_dest, _, staging = build_and_stage(promote, 1)
+
+    # staging is complete; commits start now — refresh the in-flight
+    # marker so the vacuum age gate sees activity even after a
+    # longer-than-min_age_s staging write
+    _touch_staging_inflight(staging)
+
+    stats: dict = {
+        "epoch_id": epoch_id,
+        "destinations": {},
+        "promoted_columns": promote,
+    }
+
+    lineage_rows = []
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    start = datetime.fromtimestamp(t0, timezone.utc).replace(tzinfo=None)
+
+    def commit_dead_letter():
+        dl = wh.table("dead_letter")
+        dl_entries = [
+            dict(e, path=os.path.relpath(e["path"], dl.path))
+            for e in entries_by_dest.get("dead_letter", [])
+        ]
+        dl.commit_staged_files(
+            dl_entries, DEAD_LETTER, epoch_id=epoch_id, source="dead_letter"
+        )
+
+    def commit_dest(dest: str):
+        table = wh.table(dest)
+        entries = [
+            dict(e, path=os.path.relpath(e["path"], table.path))
+            for e in entries_by_dest.get(dest, [])
+        ]
+        res = table.commit_staged_files(
+            entries, delta_schema, epoch_id=epoch_id, source="cdc"
+        )
+        return dest, entries, res
+
+    # destination tables are independent — commit them concurrently to
+    # cut the epoch's serial driver floor (VERDICT r01 item 4)
+    dests = sorted(set(DESTINATION_TABLES))
+    with ThreadPoolExecutor(max_workers=1 + len(dests)) as ex:
+        dl_future = ex.submit(commit_dead_letter)
+        for dest, entries, res in ex.map(commit_dest, dests):
+            stats["destinations"][dest] = res
+            for e in entries:
+                lineage_rows.append(
+                    (
+                        epoch_id,
+                        e["bucket"],
+                        dest,
+                        e["rows"],
+                        e["bytes"],
+                        datetime.fromisoformat(e["ts_max"]) if e["ts_max"] else None,
+                        "SUCCESS",
+                        None,
+                        start,
+                        now,
+                    )
+                )
+        dl_future.result()
+
+    for e in entries_by_dest.get("dead_letter", []):
+        lineage_rows.append(
+            (
+                epoch_id,
+                e["bucket"],
+                "dead_letter",
+                e["rows"],
+                e["bytes"],
+                datetime.fromisoformat(e["ts_max"]) if e["ts_max"] else None,
+                "FAILURE",
+                None,
+                start,
+                now,
+            )
+        )
+
+    # lineage rows are computed on the driver (footer stats): driver-side
+    # parquet write + metadata-only commit, zero Spark jobs
+    wh.table("lineage_metrics").append_rows(
+        lineage_rows, LINEAGE_METRICS, epoch_id=epoch_id, source="lineage"
+    )
+    _clear_staging_inflight(staging)
+    return stats
 
 
 def replay(
     wh: Warehouse,
     events_dir: str,
-    dedup_strategy: str = "local",
     from_epoch: int | None = None,
     stop_after_epoch: int | None = None,
     compact_every: int | None = None,
@@ -983,7 +926,7 @@ def replay(
 
     def run_one(e: int) -> int:
         events = spark.read.parquet(os.path.join(events_dir, f"epoch_hint={e}"))
-        stats = apply_epoch(wh, events, epoch_id=e, dedup_strategy=dedup_strategy)
+        stats = apply_epoch(wh, events, epoch_id=e)
         wh.mark_epoch_done(e, {"n_destinations": len(stats["destinations"])})
         return e
 
@@ -1083,7 +1026,6 @@ def reprocess_dead_letters(
     epoch_id: int,
     stages: tuple = ("route",),
     route_config: DataFrame | None = None,
-    dedup_strategy: str = "local",
 ) -> dict:
     """Fix-and-resubmit: re-ingest exactly the events that previously
     dead-lettered in the given ``stages``, under a (typically corrected)
@@ -1113,9 +1055,7 @@ def reprocess_dead_letters(
         .distinct()
     )
     events = wh.spark.read.parquet(events_dir).join(dl, "lsn", "semi")
-    stats = apply_epoch(
-        wh, events, epoch_id, dedup_strategy=dedup_strategy, route_config=route_config
-    )
+    stats = apply_epoch(wh, events, epoch_id, route_config=route_config)
     if stats.get("skipped"):
         return stats
     # which of the retried lsns STILL fail under the new config? Recompute

@@ -51,9 +51,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound Arrow batch bytes with multi-KB binary payloads
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # codecs are env-tunable so the replay-bytes A/B protocol
-        # (scripts/codec_ab.py) can measure them in clean JVMs; defaults
-        # chosen by that measurement (see BENCH/CODEC_AB.md)
+        # codecs are env-tunable per deployment; defaults chosen by the
+        # replay-bytes A/B measurement (see BENCH/CODEC_AB.md)
         .config(
             "spark.sql.parquet.compression.codec",
             os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),

@@ -62,7 +62,6 @@ def stream_ingest(
     wh: Warehouse,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    dedup_strategy: str = "local",
     suppress_redelivery_watermark: str | None = None,
     source: str = "files",
     max_epochs_per_batch: int | None = None,
@@ -121,7 +120,7 @@ def stream_ingest(
         # streaming batch ids and replay epoch ids share the guard namespace
         # "cdc"/"dead_letter"/"lineage" only within one driver mode; a
         # streaming checkpoint owns its warehouse.
-        apply_epoch(wh, batch_df, epoch_id=int(batch_id), dedup_strategy=dedup_strategy)
+        apply_epoch(wh, batch_df, epoch_id=int(batch_id))
 
     return (
         events.writeStream.foreachBatch(process)

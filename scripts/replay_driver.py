@@ -33,7 +33,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=32)
     ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--compact-every", type=int, default=None)
-    ap.add_argument("--dedup-strategy", default="agg", choices=["agg", "window_salted"])
     ap.add_argument(
         "--generate",
         nargs=3,
@@ -59,17 +58,11 @@ def main() -> None:
             args.events_dir,
             wh,
             checkpoint_dir=os.path.join(args.warehouse, "_stream_checkpoint"),
-            dedup_strategy=args.dedup_strategy,
         )
         q.awaitTermination()
         result = {"mode": "streaming"}
     else:
-        result = replay(
-            wh,
-            args.events_dir,
-            dedup_strategy=args.dedup_strategy,
-            compact_every=args.compact_every,
-        )
+        result = replay(wh, args.events_dir, compact_every=args.compact_every)
         result["mode"] = "batch"
 
     counts = {t: wh.table(t).read().count() for t in sorted(set(DESTINATION_TABLES))}

@@ -149,9 +149,8 @@ def test_dedup_strategies_agree_and_pick_latest(spark):
         _e(4, url="v", ts=datetime(2024, 1, 1, 0, 0, 1)),  # exact duplicate delivery
     ]
     df = _events(spark, rows)
-    for strat in ("agg", "window_salted"):
-        got = {r["url"]: r["lsn"] for r in dedup_last_writer(df, "url", strategy=strat).collect()}
-        assert got == {"u": 3, "v": 4}, strat
+    got = {r["url"]: r["lsn"] for r in dedup_last_writer(df, "url").collect()}
+    assert got == {"u": 3, "v": 4}
 
 
 def test_parquet_filter_pushdown(spark):
@@ -224,7 +223,7 @@ def test_dedup_agg_combines_map_side(spark):
 
 def test_dedup_extreme_hot_key(spark):
     """One url carrying 100k duplicate events resolves to exactly its max
-    (warc_ts, lsn) row under both strategies."""
+    (warc_ts, lsn) row."""
     from datetime import datetime, timedelta
 
     base = datetime(2024, 1, 1)
@@ -241,13 +240,12 @@ def test_dedup_extreme_hot_key(spark):
         f"timestamp'{base}' AS warc_ts",
     )
     df = hot.unionByName(cold)
-    for strat in ("agg", "window_salted"):
-        out = dedup_last_writer(df, "url", strategy=strat)
-        assert out.count() == 501, strat
-        winner = out.filter("url = 'https://hot.example/page'").collect()[0]
-        # max warc_ts is base+999s; among those, max lsn = 99999
-        assert winner["warc_ts"] == base + timedelta(seconds=999)
-        assert winner["lsn"] == 99999, strat
+    out = dedup_last_writer(df, "url")
+    assert out.count() == 501
+    winner = out.filter("url = 'https://hot.example/page'").collect()[0]
+    # max warc_ts is base+999s; among those, max lsn = 99999
+    assert winner["warc_ts"] == base + timedelta(seconds=999)
+    assert winner["lsn"] == 99999
 
 
 def test_canonicalize_url_edges(spark):

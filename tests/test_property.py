@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
@@ -34,7 +33,7 @@ _events = st.lists(
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_events)
 def test_dedup_last_writer_matches_python_fold(spark, raw):
-    """Both dedup strategies pick exactly the max-(warc_ts, lsn) event per
+    """The dedup operator picks exactly the max-(warc_ts, lsn) event per
     url, for arbitrary event orders including duplicate timestamps (lsn
     breaks ties) and duplicate deliveries."""
     rows = [
@@ -59,12 +58,11 @@ def test_dedup_last_writer_matches_python_fold(spark, raw):
         if cur is None or (ts, lsn) > (cur[0], cur[1]):
             expected[url] = (ts, lsn, op)
 
-    for strategy in ("agg", "window_salted"):
-        got = {
-            r["url"]: (r["warc_ts"], r["lsn"], r["op"])
-            for r in dedup_last_writer(df, key=["url"], strategy=strategy).collect()
-        }
-        assert got == expected, f"strategy={strategy}"
+    got = {
+        r["url"]: (r["warc_ts"], r["lsn"], r["op"])
+        for r in dedup_last_writer(df, key=["url"]).collect()
+    }
+    assert got == expected
 
 
 # --- as-of join vs pandas merge_asof ---------------------------------------
@@ -127,8 +125,7 @@ def test_asof_join_matches_pandas_merge_asof(spark, case):
     assert got == expected
 
 
-@pytest.mark.parametrize("strategy", ["agg", "window_salted"])
-def test_dedup_empty_batch(spark, strategy):
+def test_dedup_empty_batch(spark):
     schema = "lsn long, op string, url string, warc_ts timestamp"
     df = spark.createDataFrame([], schema)
-    assert dedup_last_writer(df, key=["url"], strategy=strategy).count() == 0
+    assert dedup_last_writer(df, key=["url"]).count() == 0

@@ -118,19 +118,13 @@ def test_compaction_preserves_state(spark, events_dir, events_pdf, tmpdir_path):
     assert all(f["kind"] == "base" for f in snap.files)
 
 
-def test_window_salted_dedup_equivalent(spark, events_dir, events_pdf, tmpdir_path):
-    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=8)
-    replay(wh, events_dir, dedup_strategy="window_salted")
-    _assert_state_equal(spark, wh, events_pdf)
-
-
 def test_local_fused_dedup_equivalent(spark, events_dir, events_pdf, tmpdir_path):
     """The one-shuffle fused path (repartition (dest,bucket) -> local sort ->
     adjacency dedup + extraction in one Arrow pass) must reach the identical
     final state, including dead letters kept at-least-once and file/bucket
     manifest invariants."""
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=8)
-    replay(wh, events_dir, dedup_strategy="local")
+    replay(wh, events_dir)
     _assert_state_equal(spark, wh, events_pdf)
     snap = wh.table("web_pages").snapshot()
     # one-file-per-(dest,bucket)-per-epoch survives the direct write
@@ -330,3 +324,43 @@ def test_cold_registry_single_staging_pass(spark, events_dir, tmpdir_path, monke
     # pre-scan seed: exactly one staged write per epoch
     assert len(calls) == 2, f"expected 2 staging passes (1/epoch), got {len(calls)}"
     assert wh.known_promote_keys() != []
+
+
+def test_empty_registry_prescans_once(spark, tmpdir_path, monkeypatch):
+    """A warehouse whose batches carry no promotable meta key runs the cold
+    pre-scan once, not once per epoch: the empty registry is written after
+    the first scan and counts as warm."""
+    import data_exchange_routing_spark.pipeline as P
+    from data_exchange_routing_spark.schemas import ROUTE_CONFIG
+    from data_exchange_routing_spark.sources.configs import DEFAULT_ROUTES
+    from data_exchange_routing_spark.sources.datagen import generate_change_events
+
+    calls: list[int] = []
+    orig = P.detect_promotable_meta_keys
+
+    def counting(df):
+        calls.append(1)
+        return orig(df)
+
+    monkeypatch.setattr(P, "detect_promotable_meta_keys", counting)
+    no_extra_meta = spark.createDataFrame(
+        [
+            {
+                "route_key": k,
+                "destination_table": t,
+                "destination_partition": p,
+                "extra_meta": None,
+                "is_valid": v,
+            }
+            for (k, t, p, _, v) in DEFAULT_ROUTES
+        ],
+        ROUTE_CONFIG,
+    )
+    events = generate_change_events(spark, 200, 40, n_epochs=1)
+    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_empty_registry"), n_buckets=4)
+    wh.init_tables()
+    for epoch in (0, 1):
+        stats = P.apply_epoch(wh, events, epoch_id=epoch, route_config=no_extra_meta)
+        assert stats["promoted_columns"] == []
+    assert len(calls) == 1, f"expected one cold pre-scan, got {len(calls)}"
+    assert wh.known_promote_keys() == []
