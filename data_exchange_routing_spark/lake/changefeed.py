@@ -35,12 +35,11 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_exchange_routing_spark.lake.table import LakeTable
+from data_exchange_routing_spark.lake.table import LakeTable, _atomic_replace_json
 
 
 class ChangeFeedConsumer:
@@ -81,10 +80,9 @@ class ChangeFeedConsumer:
             return 1
 
     def _advance(self, version: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.cursor_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"consumer_id": self.consumer_id, "version": version}, f)
-        os.replace(tmp, self._cursor_path())
+        _atomic_replace_json(
+            self._cursor_path(), {"consumer_id": self.consumer_id, "version": version}
+        )
 
     def seek(self, version: int) -> None:
         """Explicit reposition (replay/rebuild)."""

@@ -189,16 +189,7 @@ class RollupView:
         )
         for f in staged:
             f["kind"] = "base"
-        from data_exchange_routing_spark.lake.table import Snapshot
-
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=None,
-            committed_epochs=snap.committed_epochs,
-            summary={"operation": "rollup-compact"},
-        )
+        new = snap.successor(summary={"operation": "rollup-compact"})
         new.replace_files(staged)
         try:
             self.table._write_snapshot(new)

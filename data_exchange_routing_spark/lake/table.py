@@ -8,7 +8,9 @@ its own lake layer with the same commit semantics the reference hand-rolls:
   ``_meta/snapshot-N.json`` (os.link is atomic on POSIX). This mirrors the
   reference's chunked staged upload + ordered ``commitBlockList``
   (fns-routing/.../RouteIngestedFile.kt:470-550, sort :543-545, commit :547-548)
-  and is exactly Iceberg's manifest-swap commit.
+  and is exactly Iceberg's manifest-swap commit. Every commit derives its
+  snapshot from the one it read with ``Snapshot.successor()``; commits that
+  may retry share one optimistic loop (``LakeTable._commit_retry``).
 - *idempotent epoch commits*: every snapshot records the epoch-id it applied
   plus the cumulative set of committed epochs; re-applying a committed epoch is
   a no-op. This is the exactly-once guard the reference approximates with
@@ -43,7 +45,7 @@ import os
 import tempfile
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,16 +141,20 @@ class Snapshot:
     # merge-on-read delete files (Iceberg v2 analog), kept OUT of ``files``
     # so every data-file walk (pruning, stats, compaction byte counters)
     # stays delete-oblivious; ``_read_files`` is the single application
-    # point. None means "not set by this commit" — ``_write_snapshot``
-    # inherits the previous snapshot's list, so the dozens of commit paths
-    # that predate the feature carry deletes forward without knowing about
-    # them. Entry: {path, kind: eqdel|posdel, rows, bytes, seq?, cols?}.
-    delete_files: list[dict[str, Any]] | None = None
+    # point. Entry: {path, kind: eqdel|posdel, rows, bytes, seq?, cols?}.
+    delete_files: list[dict[str, Any]] = field(default_factory=list)
     # row-lineage high watermark (Iceberg v3 row-id analog, append-only
-    # tables): the next unassigned row id. None = "not set by this commit";
-    # _write_snapshot inherits and advances it while stamping first_row_id
-    # onto new manifest entries, so no commit path needs to know about it.
-    next_row_id: int | None = None
+    # tables): the next unassigned row id. _write_snapshot advances it
+    # while stamping first_row_id onto new manifest entries.
+    next_row_id: int = 0
+
+    def successor(self, **changes) -> "Snapshot":
+        """The next version derived from this one: every field not named in
+        ``changes`` carries forward (delete files and the row-id watermark
+        included), so a commit states only what it changes. Shallow: list
+        and dict fields are shared with this snapshot, so callers rebind
+        them (``tail=head.tail + entries``) rather than mutate in place."""
+        return replace(self, version=self.version + 1, **changes)
 
     @property
     def files(self) -> list[dict[str, Any]]:
@@ -171,6 +177,21 @@ class Snapshot:
 
     def epoch_committed(self, source: str, epoch_id: int) -> bool:
         return _enc_contains(self.committed_epochs.get(source, []), epoch_id)
+
+
+def _content_of(snap: Snapshot) -> dict[str, Any]:
+    """``snap``'s table content as ``successor`` changes — what rollback
+    and fast-forward publish copy onto the head. The row-id watermark is
+    not content: the head keeps its own."""
+    return {
+        "schema_json": snap.schema_json,
+        "n_buckets": snap.n_buckets,
+        "segments": list(snap.segments),
+        "tail": list(snap.tail),
+        "seg_files": snap.seg_files,
+        "committed_epochs": dict(snap.committed_epochs),
+        "delete_files": list(snap.delete_files),
+    }
 
 
 def _arrow_type(dt: T.DataType):
@@ -246,12 +267,13 @@ def _bounded_str_range(lo: str, hi: str, limit: int = _STR_STATS_MAX) -> list[st
     return [lo, hi]
 
 
-def _atomic_replace_json(path: str, payload: dict) -> None:
+def _atomic_replace_json(path: str, payload: dict | list) -> None:
     """Durable OVERWRITE publish (contrast _atomic_write_json's exclusive
     create): fsync'd tmp + atomic replace + parent-dir fsync. The ONE
     persist ritual for every overwritable metadata file (checkpoint
-    watermark, ANN index metadata) — a durability/schema change lands
-    here once."""
+    watermark, ANN index metadata, partition specs, column defaults,
+    change-feed cursors, the promoted-key registry) — a durability/schema
+    change lands here once."""
     d = os.path.dirname(path)
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
     try:
@@ -346,10 +368,7 @@ class LakeTable:
             new_id = max([int(k) for k in st["specs"]] or [0]) + 1
             st["specs"][str(new_id)] = norm
             st["current"] = new_id
-        tmp = os.path.join(self.meta_dir, f".specs-{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, os.path.join(self.meta_dir, "partition_specs.json"))
+        _atomic_replace_json(os.path.join(self.meta_dir, "partition_specs.json"), st)
         return st
 
     def partition_prune_stats(
@@ -524,7 +543,7 @@ class LakeTable:
             committed_epochs=d.get("committed_epochs", {}),
             summary=d.get("summary", {}),
             delete_files=d.get("delete_files", []),
-            next_row_id=d.get("next_row_id"),
+            next_row_id=d.get("next_row_id") or 0,
         )
         if snap.segments:
             snap.seg_files = _resolve_segments(self.meta_dir, snap.segments)
@@ -573,16 +592,12 @@ class LakeTable:
         # A row's id is first_row_id + its position in the file — stable
         # until a rewrite, which materializes ids INTO the new files
         # (entry marked row_ids="file", never restamped). The watermark
-        # inherits from the commit's base snapshot and is bumped over every
-        # already-stamped entry first, so publish/rollback/clone flows that
-        # splice entries from other lineages can never double-assign an id.
+        # comes from the snapshot this commit was derived from and is
+        # bumped over every already-stamped entry first, so
+        # publish/rollback/clone flows that splice entries from other
+        # lineages can never double-assign an id.
         if snap.key is None:
             nxt = snap.next_row_id
-            if nxt is None:
-                try:
-                    nxt = self.snapshot(snap.version - 1).next_row_id or 0
-                except FileNotFoundError:
-                    nxt = 0
             for e in (snap.seg_files or []) + snap.tail:
                 frid = e.get("first_row_id")
                 if frid is not None:
@@ -604,14 +619,6 @@ class LakeTable:
             with open(os.path.join(self.meta_dir, merged), "w") as f:
                 json.dump(snap.seg_files, f)
             snap.segments = [merged]
-        if snap.delete_files is None:
-            # commit path didn't touch MoR delete files: carry the previous
-            # snapshot's list forward (the base this commit was built on is
-            # version-1 — the exclusive-create below guarantees it)
-            try:
-                snap.delete_files = self.snapshot(snap.version - 1).delete_files or []
-            except FileNotFoundError:
-                snap.delete_files = []
         payload = {
             "version": snap.version,
             "committed_at": time.time(),  # wall clock, for AS OF reads only
@@ -628,6 +635,26 @@ class LakeTable:
         }
         path = os.path.join(self.meta_dir, f"{self._snap_prefix}{snap.version:08d}.json")
         _atomic_write_json(path, payload)
+
+    def _commit_retry(self, build, what: str) -> tuple[Snapshot, Snapshot | None]:
+        """The optimistic-concurrency commit loop (Iceberg-style) every
+        retrying commit shares: read the head, derive its successor with
+        ``build(head)``, race the exclusive create; a loser re-reads the new
+        head and builds again on top, so guards are re-checked and seqs
+        re-stamped per attempt. ``build`` returns None to commit nothing
+        (e.g. the epoch already landed). Returns (head, committed snapshot
+        or None)."""
+        for _attempt in range(50):
+            head = self.snapshot()
+            new = build(head)
+            if new is None:
+                return head, None
+            try:
+                self._write_snapshot(new)
+            except FileExistsError:
+                continue
+            return head, new
+        raise RuntimeError(f"{what} contention exhausted retries on {self.path}")
 
     # -------------------------------------------------------------- reading
     def _read_files(
@@ -799,7 +826,7 @@ class LakeTable:
         over-delete. Both sides broadcast (delete sets are small by
         construction — compaction materializes them before they grow); the
         scan itself stays one pass, no shuffle."""
-        dels = snap.delete_files or []
+        dels = snap.delete_files
         if not dels:
             return df
         pos_files = [d for d in dels if d["kind"] == "posdel" and d.get("rows", 0) > 0]
@@ -1430,7 +1457,7 @@ class LakeTable:
             raise ValueError(f"no column {name!r} on {self.path}")
         if any(
             name in d.get("cols", [])
-            for d in (snap.delete_files or [])
+            for d in snap.delete_files
             if d["kind"] == "eqdel"
         ):
             raise ValueError(
@@ -1438,45 +1465,35 @@ class LakeTable:
                 "files; rewrite_files() to materialize the deletes first"
             )
         marker = os.path.join(self.meta_dir, f"dropped-{name}.json")
-        for _attempt in range(50):
-            snap = self.snapshot()
-            fields = [f for f in snap.schema().fields if f.name != name]
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(T.StructType(fields).jsonValue()),
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail,
-                committed_epochs=snap.committed_epochs,
+        _, new = self._commit_retry(
+            lambda head: head.successor(
+                schema_json=json.dumps(T.StructType(
+                    [f for f in head.schema().fields if f.name != name]
+                ).jsonValue()),
                 summary={"operation": "drop-column", "column": name},
-                seg_files=snap.seg_files,
-            )
+            ),
+            "drop_column",
+        )
+        try:
+            _atomic_write_json(marker, {"dropped_at_version": new.version})
+        except FileExistsError:
+            pass  # dropped before, re-added after a purge, dropped again
+        # a renamed column's bytes live under its alias names too — every
+        # one of them must be resurrection-guarded, and the alias map
+        # itself is dead once the column is gone
+        for alias in self._rename_markers().get(name, []):
             try:
-                self._write_snapshot(new)
+                _atomic_write_json(
+                    os.path.join(self.meta_dir, f"dropped-{alias}.json"),
+                    {"dropped_at_version": new.version, "alias_of": name},
+                )
             except FileExistsError:
-                continue
-            try:
-                _atomic_write_json(marker, {"dropped_at_version": new.version})
-            except FileExistsError:
-                pass  # dropped before, re-added after a purge, dropped again
-            # a renamed column's bytes live under its alias names too — every
-            # one of them must be resurrection-guarded, and the alias map
-            # itself is dead once the column is gone
-            for alias in self._rename_markers().get(name, []):
-                try:
-                    _atomic_write_json(
-                        os.path.join(self.meta_dir, f"dropped-{alias}.json"),
-                        {"dropped_at_version": new.version, "alias_of": name},
-                    )
-                except FileExistsError:
-                    pass
-            rm = os.path.join(self.meta_dir, f"renamed-{name}.json")
-            if os.path.exists(rm):
-                os.unlink(rm)
-            self._move_default(name, None)
-            return {"version": new.version, "column": name}
-        raise RuntimeError(f"drop_column contention exhausted retries on {self.path}")
+                pass
+        rm = os.path.join(self.meta_dir, f"renamed-{name}.json")
+        if os.path.exists(rm):
+            os.unlink(rm)
+        self._move_default(name, None)
+        return {"version": new.version, "column": name}
 
     def _move_default(self, old: str, new: str | None) -> None:
         """Rekey (rename) or remove (drop) a column's initial-default entry."""
@@ -1486,10 +1503,7 @@ class LakeTable:
         entry = d.pop(old)
         if new is not None:
             d[new] = entry
-        p = os.path.join(self.meta_dir, "defaults.json")
-        with open(p + ".tmp", "w") as f:
-            f.write(json.dumps(d, indent=1))
-        os.replace(p + ".tmp", p)
+        _atomic_replace_json(os.path.join(self.meta_dir, "defaults.json"), d)
 
     def _clear_drop_markers(self) -> None:
         """Called after a FULL rewrite: every surviving data file was written
@@ -1578,44 +1592,25 @@ class LakeTable:
             ).collect()[0]["d"]
             if probe is None:
                 raise ValueError(f"default {default!r} does not cast to {dt.simpleString()}")
-        for _attempt in range(50):
-            snap = self.snapshot()
-            fields = snap.schema().fields + [T.StructField(name, dt, True)]
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(T.StructType(fields).jsonValue()),
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail,
-                committed_epochs=snap.committed_epochs,
+        _, new = self._commit_retry(
+            lambda head: head.successor(
+                schema_json=json.dumps(T.StructType(
+                    head.schema().fields + [T.StructField(name, dt, True)]
+                ).jsonValue()),
                 summary={
                     "operation": "add-column",
                     "column": name,
                     "type": dt.simpleString(),
                     "default": stored,
                 },
-                seg_files=snap.seg_files,
-            )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            if default is not None:
-                d = self._column_defaults()
-                d[name] = {
-                    "value": stored,
-                    "type": dt.simpleString(),
-                    "seq": new.version,
-                }
-                # overwrite-in-place (single-writer DDL metadata): tmp+rename
-                tmp = os.path.join(self.meta_dir, "defaults.json")
-                payload = json.dumps(d, indent=1)
-                with open(tmp + ".tmp", "w") as f:
-                    f.write(payload)
-                os.replace(tmp + ".tmp", tmp)
-            return {"version": new.version, "column": name, "default": stored}
-        raise RuntimeError(f"commit contention exhausted retries on {self.path}")
+            ),
+            "commit",
+        )
+        if default is not None:
+            d = self._column_defaults()
+            d[name] = {"value": stored, "type": dt.simpleString(), "seq": new.version}
+            _atomic_replace_json(os.path.join(self.meta_dir, "defaults.json"), d)
+        return {"version": new.version, "column": name, "default": stored}
 
     # ------------------------------------------------------ RENAME COLUMN
 
@@ -1762,7 +1757,7 @@ class LakeTable:
             )
         if any(
             old in d.get("cols", [])
-            for d in (snap.delete_files or [])
+            for d in snap.delete_files
             if d["kind"] == "eqdel"
         ):
             raise ValueError(
@@ -1770,39 +1765,27 @@ class LakeTable:
                 "files (value sets are name-keyed); rewrite_files() to "
                 "materialize the deletes first"
             )
-        for _attempt in range(50):
-            snap = self.snapshot()
-            new_fields = [
-                T.StructField(new, f.dataType, True) if f.name == old else f
-                for f in snap.schema().fields
-            ]
-            nxt = Snapshot(
-                version=snap.version + 1,
-                schema_json=json.dumps(T.StructType(new_fields).jsonValue()),
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail,
-                committed_epochs=snap.committed_epochs,
+        _, nxt = self._commit_retry(
+            lambda head: head.successor(
+                schema_json=json.dumps(T.StructType([
+                    T.StructField(new, f.dataType, True) if f.name == old else f
+                    for f in head.schema().fields
+                ]).jsonValue()),
                 summary={"operation": "rename-column", "from": old, "to": new},
-                seg_files=snap.seg_files,
-            )
-            try:
-                self._write_snapshot(nxt)
-            except FileExistsError:
-                continue
-            aliases = [old] + markers.get(old, [])
-            _atomic_write_json(
-                os.path.join(self.meta_dir, f"renamed-{new}.json"), {"aliases": aliases}
-            )
-            if old in markers:
-                # chain fold: crash between the two ops leaves the old marker
-                # behind, inert (its current-name is no longer in any live
-                # schema) and GC'd by the next full-rewrite clear
-                os.unlink(os.path.join(self.meta_dir, f"renamed-{old}.json"))
-            self._move_default(old, new)
-            return {"version": nxt.version, "from": old, "to": new, "aliases": aliases}
-        raise RuntimeError(f"rename_column contention exhausted retries on {self.path}")
+            ),
+            "rename_column",
+        )
+        aliases = [old] + markers.get(old, [])
+        _atomic_write_json(
+            os.path.join(self.meta_dir, f"renamed-{new}.json"), {"aliases": aliases}
+        )
+        if old in markers:
+            # chain fold: crash between the two ops leaves the old marker
+            # behind, inert (its current-name is no longer in any live
+            # schema) and GC'd by the next full-rewrite clear
+            os.unlink(os.path.join(self.meta_dir, f"renamed-{old}.json"))
+        self._move_default(old, new)
+        return {"version": nxt.version, "from": old, "to": new, "aliases": aliases}
 
     def _evolved_schema(self, snap: Snapshot, incoming: T.StructType) -> str | None:
         """Schema evolution on commit: new nullable columns from the source
@@ -1883,44 +1866,41 @@ class LakeTable:
         Iceberg-style, so one multicast Spark write can feed N tables).
 
         ``delta_schema`` drives additive evolution exactly like a DataFrame
-        commit would. No Spark job runs here.
+        commit would. ``summary["operation"]`` names the commit in
+        ``history()`` (default ``merge-staged``). No Spark job runs here.
         """
         for e in entries:
             e.setdefault("kind", kind)
-        for _attempt in range(50):
-            snap = self.snapshot()
-            if epoch_id is not None and snap.epoch_committed(source, epoch_id):
-                return {"skipped": True, "epoch_id": epoch_id, "version": snap.version}
-            for e in entries:  # exact data sequence = the version that lands
-                e["seq"] = snap.version + 1
-            schema_json = self._evolved_schema(snap, delta_schema) or snap.schema_json
-            committed = dict(snap.committed_epochs)
+
+        def build(head: Snapshot) -> Snapshot | None:
+            if epoch_id is not None and head.epoch_committed(source, epoch_id):
+                return None
+            for e in entries:
+                # exact data sequence = the version that lands; a row-id
+                # stamp left by a lost attempt is stale on the new head
+                e["seq"] = head.version + 1
+                e.pop("first_row_id", None)
+            committed = head.committed_epochs
             if epoch_id is not None:
                 add = _enc_add_monotonic if epoch_monotonic else _enc_add
-                committed[source] = add(snap.committed_epochs.get(source, []), epoch_id)
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_json=schema_json,
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail + entries,
+                committed = {**committed, source: add(committed.get(source, []), epoch_id)}
+            return head.successor(
+                schema_json=self._evolved_schema(head, delta_schema) or head.schema_json,
+                tail=head.tail + entries,
                 committed_epochs=committed,
-                summary={**(summary or {}), "epoch_id": epoch_id, "operation": "merge-staged"},
-                seg_files=snap.seg_files,
+                summary={"operation": "merge-staged", **(summary or {}), "epoch_id": epoch_id},
             )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            return {
-                "skipped": False,
-                "epoch_id": epoch_id,
-                "version": new.version,
-                "files_added": len(entries),
-                "rows_added": sum(e.get("rows", 0) for e in entries),
-            }
-        raise RuntimeError(f"commit contention exhausted retries on {self.path}")
+
+        head, new = self._commit_retry(build, "commit")
+        if new is None:
+            return {"skipped": True, "epoch_id": epoch_id, "version": head.version}
+        return {
+            "skipped": False,
+            "epoch_id": epoch_id,
+            "version": new.version,
+            "files_added": len(entries),
+            "rows_added": sum(e.get("rows", 0) for e in entries),
+        }
 
     def append(
         self,
@@ -2376,42 +2356,11 @@ class LakeTable:
                 for e in files:
                     e["bloom"] = bloom
 
-        # optimistic-concurrency commit loop (Iceberg-style): losers of the
-        # exclusive-create race re-read the new snapshot and retry on top.
-        for _attempt in range(50):
-            snap = self.snapshot()
-            if epoch_id is not None and snap.epoch_committed(source, epoch_id):
-                return {"skipped": True, "epoch_id": epoch_id, "version": snap.version}
-            for e in files:  # exact data sequence = the version that lands
-                e["seq"] = snap.version + 1
-            new_schema_json = self._evolved_schema(snap, df.schema) or snap.schema_json
-            committed = dict(snap.committed_epochs)
-            if epoch_id is not None:
-                add = _enc_add_monotonic if epoch_monotonic else _enc_add
-                committed[source] = add(snap.committed_epochs.get(source, []), epoch_id)
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_json=new_schema_json,
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail + files,
-                committed_epochs=committed,
-                summary={**(summary or {}), "epoch_id": epoch_id, "operation": "merge" if is_cdc else "append"},
-                seg_files=snap.seg_files,
-            )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            return {
-                "skipped": False,
-                "epoch_id": epoch_id,
-                "version": new.version,
-                "files_added": len(files),
-                "rows_added": sum(e.get("rows", 0) for e in files),
-            }
-        raise RuntimeError(f"commit contention exhausted retries on {self.path}")
+        return self.commit_staged_files(
+            files, df.schema, epoch_id=epoch_id, source=source,
+            summary={**(summary or {}), "operation": "merge" if is_cdc else "append"},
+            epoch_monotonic=epoch_monotonic,
+        )
 
     # ----------------------------------------------------------- compaction
     def added_delta_files(self, from_version: int, to_version: int | None = None) -> list[dict]:
@@ -2490,26 +2439,16 @@ class LakeTable:
         The committed-epoch guard also rewinds, so replaying the undone
         epochs reconverges to the pre-rollback state."""
         target = self.snapshot(version)
-        for _attempt in range(50):
-            cur = self.snapshot()
-            new = Snapshot(
-                version=cur.version + 1,
-                schema_json=target.schema_json,
-                n_buckets=target.n_buckets,
-                key=target.key,
-                segments=list(target.segments),
-                tail=list(target.tail),
-                committed_epochs=dict(target.committed_epochs),
+        # derived from the HEAD, not the target: the row-id watermark must
+        # never move backwards, or ids assigned since ``version`` repeat
+        _, new = self._commit_retry(
+            lambda head: head.successor(
+                **_content_of(target),
                 summary={"operation": "rollback", "to_version": version},
-                seg_files=target.seg_files,
-                delete_files=list(target.delete_files or []),
-            )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            return {"version": new.version, "rolled_back_to": version}
-        raise RuntimeError(f"rollback contention exhausted retries on {self.path}")
+            ),
+            "rollback",
+        )
+        return {"version": new.version, "rolled_back_to": version}
 
     # ---------------------------------------------------- WAP branches
     # Iceberg write-audit-publish: commits land on an isolated branch ref,
@@ -2536,17 +2475,8 @@ class LakeTable:
         b = self.branch(name)
         if b.current_version() > 0:
             raise ValueError(f"branch {name!r} already exists")
-        fork = Snapshot(
-            version=snap.version,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            segments=list(snap.segments),
-            tail=list(snap.tail),
-            committed_epochs=dict(snap.committed_epochs),
-            summary={"operation": "wap-fork", "forked_at": snap.version},
-            seg_files=snap.seg_files,
-            delete_files=list(snap.delete_files or []),
+        fork = replace(
+            snap, summary={"operation": "wap-fork", "forked_at": snap.version}
         )
         b._write_snapshot(fork)
         return b
@@ -2582,45 +2512,32 @@ class LakeTable:
         ``abort_branch`` / ``expire_snapshots`` clean them up."""
         b = self.branch(name)
         head = b.snapshot()
-        fork_v = self._branch_fork_version(name)
-        for _attempt in range(50):
-            cur = self.snapshot()
-            if cur.version == fork_v:
-                new = Snapshot(
-                    version=cur.version + 1,
-                    schema_json=head.schema_json,
-                    n_buckets=head.n_buckets,
-                    key=head.key,
-                    segments=list(head.segments),
-                    tail=list(head.tail),
-                    committed_epochs=dict(head.committed_epochs),
-                    summary={"operation": "wap-publish", "branch": name,
-                             "branch_head": head.version},
-                    seg_files=head.seg_files,
-                    delete_files=list(head.delete_files or []),
+        fork = b.snapshot(self._branch_fork_version(name))
+        mode: dict = {}
+
+        def build(cur: Snapshot) -> Snapshot:
+            info = {"branch": name, "branch_head": head.version}
+            if cur.version == fork.version:
+                # main's own row-id watermark carries (see rollback)
+                mode.update(mode="fast_forward")
+                return cur.successor(
+                    **_content_of(head), summary={"operation": "wap-publish", **info}
                 )
-                try:
-                    self._write_snapshot(new)
-                except FileExistsError:
-                    continue
-                return {"published": True, "mode": "fast_forward", "version": new.version}
             if not rebase:
                 raise RuntimeError(
-                    f"main advanced past fork (at v{cur.version}, forked v{fork_v}); "
+                    f"main advanced past fork (at v{cur.version}, forked v{fork.version}); "
                     "publish_branch(rebase=True) to replay the branch's additions"
                 )
             if cur.n_buckets != head.n_buckets:
                 raise RuntimeError("cannot rebase across a rebucket")
-            fork_paths = {f["path"] for f in b.snapshot(fork_v).files}
+            fork_paths = {f["path"] for f in fork.files}
             head_files = head.files
             if not fork_paths <= {f["path"] for f in head_files}:
                 raise RuntimeError(
                     "branch compacted/removed fork files; rebase supports "
                     "additive branches only — publish before compacting"
                 )
-            fork_dels = {d["path"] for d in (b.snapshot(fork_v).delete_files or [])}
-            head_dels = {d["path"] for d in (head.delete_files or [])}
-            if head_dels != fork_dels:
+            if {d["path"] for d in head.delete_files} != {d["path"] for d in fork.delete_files}:
                 raise RuntimeError(
                     "branch changed MoR delete files; rebase supports "
                     "additive branches only — fast-forward publish, or "
@@ -2632,29 +2549,16 @@ class LakeTable:
                 committed[srcn] = _enc_epochs(
                     _dec_epochs(committed.get(srcn, [])) | _dec_epochs(enc)
                 )
-            schema_json = (
-                self._evolved_schema(cur, T.StructType.fromJson(json.loads(head.schema_json)))
-                or cur.schema_json
-            )
-            new = Snapshot(
-                version=cur.version + 1,
-                schema_json=schema_json,
-                n_buckets=cur.n_buckets,
-                key=cur.key,
-                segments=cur.segments,
+            mode.update(mode="rebase", files_added=len(added))
+            return cur.successor(
+                schema_json=self._evolved_schema(cur, head.schema()) or cur.schema_json,
                 tail=cur.tail + added,
                 committed_epochs=committed,
-                summary={"operation": "wap-publish-rebase", "branch": name,
-                         "branch_head": head.version},
-                seg_files=cur.seg_files,
+                summary={"operation": "wap-publish-rebase", **info},
             )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            return {"published": True, "mode": "rebase", "version": new.version,
-                    "files_added": len(added)}
-        raise RuntimeError(f"publish contention exhausted retries on {self.path}")
+
+        _, new = self._commit_retry(build, "publish")
+        return {"published": True, **mode, "version": new.version}
 
     def abort_branch(self, name: str) -> dict:
         """Drop the branch refs. Data files only the branch referenced become
@@ -2760,12 +2664,7 @@ class LakeTable:
         for f in files:
             f["kind"] = "base"
         kept = [f for f in snap.files if f["bucket"] not in selected]
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={"operation": "compact", "buckets": sorted(selected) if buckets is not None else "all"},
         )
         new.replace_files(kept + files)
@@ -2832,12 +2731,7 @@ class LakeTable:
             f["folded"] = True
         drop = {f["path"] for f in dfiles}
         kept = [f for f in snap.files if f["path"] not in drop]
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={
                 "operation": "compact-deltas",
                 "buckets": sorted(touched),
@@ -2880,12 +2774,8 @@ class LakeTable:
         # the full file set is rewritten, -1 strays included, so the
         # watermark is always safe here (no older row can hide elsewhere)
         resolved = self._resolved_state(snap, snap.files, tombstone_watermark)
-        new_snap_proto = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
+        new_snap_proto = snap.successor(
             n_buckets=new_n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
             summary={"operation": "rebucket", "from": snap.n_buckets, "to": new_n_buckets},
         )
         out = self._align(resolved, snap.schema()).withColumn(
@@ -2949,12 +2839,7 @@ class LakeTable:
         )
         for f in files:
             f["kind"] = "base"
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=None,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={"operation": "rewrite-files", "n_files": n_files},
             # the rewrite read went through _read_files, which applied every
             # MoR delete file — the fresh files ARE the post-delete state,
@@ -3041,7 +2926,7 @@ class LakeTable:
                     int(d["seq"]) if d.get("seq") is not None else None,
                     list(d.get("cols") or []),
                 )
-                for d in (self.snapshot(version).delete_files or [])
+                for d in self.snapshot(version).delete_files
             ]
             return self.spark.createDataFrame(
                 rows,
@@ -3169,12 +3054,7 @@ class LakeTable:
             new_files = self._stage_files(
                 df, snap, snap.version + 1, bucketed=False, n_files=len(straddle)
             )
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={
                 "operation": "expire-data",
                 "col": col,
@@ -3393,11 +3273,7 @@ class LakeTable:
         committed = dict(snap.committed_epochs)
         if epoch_id is not None:
             committed[source] = _enc_add(committed.get(source, []), epoch_id)
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
+        new = snap.successor(
             committed_epochs=committed,
             summary={
                 "operation": "overwrite-partitions",
@@ -3449,12 +3325,7 @@ class LakeTable:
                 kept_df, snap, snap.version + 1, bucketed=False, n_files=len(rewrite)
             )
             deleted = before - sum(f.get("rows", 0) for f in new_files)
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={**summary, "files_rewritten": len(rewrite), "rows_deleted": deleted},
         )
         new.replace_files(keep + new_files)
@@ -3630,35 +3501,24 @@ class LakeTable:
     ) -> dict:
         """Optimistic commit appending MoR delete entries (and, for UPDATE,
         the updated data files) to the head snapshot."""
-        for _attempt in range(50):
-            snap = self.snapshot()
-            for e in del_entries:
-                e["seq"] = snap.version + 1
-            for e in data_entries or []:
-                e["seq"] = snap.version + 1
-            new = Snapshot(
-                version=snap.version + 1,
-                schema_json=snap.schema_json,
-                n_buckets=snap.n_buckets,
-                key=snap.key,
-                segments=snap.segments,
-                tail=snap.tail + (data_entries or []),
-                committed_epochs=snap.committed_epochs,
+        data_entries = data_entries or []
+
+        def build(head: Snapshot) -> Snapshot:
+            for e in del_entries + data_entries:
+                e["seq"] = head.version + 1
+            return head.successor(
+                tail=head.tail + data_entries,
                 summary=summary,
-                seg_files=snap.seg_files,
-                delete_files=(snap.delete_files or []) + del_entries,
+                delete_files=head.delete_files + del_entries,
             )
-            try:
-                self._write_snapshot(new)
-            except FileExistsError:
-                continue
-            return {
-                "skipped": False,
-                "version": new.version,
-                "delete_files_added": len(del_entries),
-                **{k: v for k, v in summary.items() if k.startswith("rows_")},
-            }
-        raise RuntimeError(f"MoR delete contention exhausted retries on {self.path}")
+
+        _, new = self._commit_retry(build, "MoR delete")
+        return {
+            "skipped": False,
+            "version": new.version,
+            "delete_files_added": len(del_entries),
+            **{k: v for k, v in summary.items() if k.startswith("rows_")},
+        }
 
     def compact_mor_deletes(self) -> dict:
         """Minor merge-on-read compaction (Iceberg's
@@ -3687,7 +3547,7 @@ class LakeTable:
         a no-op. Concurrent-append safe: aborts on version conflict instead
         of dropping the concurrent batch."""
         snap = self.snapshot()
-        dels = snap.delete_files or []
+        dels = snap.delete_files
         if not dels:
             return {"skipped": True, "reason": "no-delete-files"}
         if snap.key is not None:  # unreachable via public API: MoR delete
@@ -3750,12 +3610,7 @@ class LakeTable:
             removed = sum(f.get("rows", 0) for f in rewrite) - sum(
                 f.get("rows", 0) for f in new_files
             )
-        new = Snapshot(
-            version=snap.version + 1,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
-            committed_epochs=snap.committed_epochs,
+        new = snap.successor(
             summary={
                 "operation": "compact-mor-deletes",
                 "files_rewritten": len(rewrite),
@@ -3811,7 +3666,7 @@ class LakeTable:
             old["path"]: new_e["path"] for old, new_e in zip(snap.files, entries)
         }
         del_entries = []
-        for d in snap.delete_files or []:
+        for d in snap.delete_files:
             src = os.path.join(self.path, d["path"])
             if d["kind"] == "posdel":
                 import pyarrow.compute as pc
@@ -3846,15 +3701,12 @@ class LakeTable:
         dflt = self._column_defaults()
         if dflt:
             _atomic_write_json(os.path.join(dest.meta_dir, "defaults.json"), dflt)
-        new = Snapshot(
+        new = replace(
             # the clone keeps the source's version number (not 1): data
             # sequence numbers copied with the entries stay below every
             # FUTURE clone commit's seq (= version+1), so copied equality
             # deletes can never apply to rows appended post-clone
-            version=snap.version,
-            schema_json=snap.schema_json,
-            n_buckets=snap.n_buckets,
-            key=snap.key,
+            snap,
             committed_epochs=dict(snap.committed_epochs),
             summary={"operation": "clone", "source": self.path,
                      "source_version": snap.version},
