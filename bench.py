@@ -333,16 +333,25 @@ def main_cdc_only(cores: int, events_dir: str, json_out: str | None, repeats: in
             f.write(line)
 
 
+def _temp_file(suffix: str, prefix: str = "bench_") -> str:
+    """Create an empty temp file atomically (no mktemp name race); return
+    its path."""
+    fd, path = tempfile.mkstemp(prefix=prefix, suffix=suffix)
+    os.close(fd)
+    return path
+
+
 def _run_child(cmd: list, env: dict, json_out: str, retries: int = 1):
     """Run one protocol child JVM; return its parsed JSON record or None.
 
     A transient child failure (JVM launch race, flap-window timeout) used
     to abort the whole interleaved protocol run and lose every prior
     measurement; now the child's stderr is kept in a log file, the child
-    is retried once, and a still-failing slot is skipped (the record then
-    simply carries one fewer disclosed run for that level)."""
+    is retried once, and a still-failing slot returns None. Callers keep
+    that None in the level's run list as a placeholder, so run i of every
+    level still belongs to interleave round i."""
     for attempt in range(retries + 1):
-        err_path = tempfile.mktemp(prefix="bench_child_", suffix=".log")
+        err_path = _temp_file(".log", prefix="bench_child_")
         with open(err_path, "wb") as err_f:
             res = subprocess.run(cmd, env=env, stdout=subprocess.DEVNULL, stderr=err_f)
         if res.returncode == 0:
@@ -367,8 +376,10 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
     different fault costs (the host's schedule, not the engine). Each
     interleaved (N, 4N) pair ran back-to-back; a pair whose four probes all
     sit in the same state (all healthy, or all degraded within 3x of each
-    other) yields an efficiency where both sides paid the same tax. Returns
-    (pair_rows, best_same_state_pair).
+    other) yields an efficiency where both sides paid the same tax. A pair
+    with a skipped slot (None, see ``_run_child``) on either side is
+    dropped; the others keep their round index. Returns (pair_rows,
+    best_same_state_pair).
     """
 
     def _probes(r):
@@ -385,6 +396,8 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
     pair_rows = []
     for i in range(min(len(all_runs[n_lo]), len(all_runs[n_hi]))):
         rl, rh = all_runs[n_lo][i], all_runs[n_hi][i]
+        if rl is None or rh is None:
+            continue
         p_eff = (rh["events_per_sec"] / n_hi) / (rl["events_per_sec"] / n_lo)
         pair_rows.append(
             {
@@ -402,6 +415,37 @@ def _pair_analysis(all_runs: dict, n_lo: int, n_hi: int) -> tuple[list, dict | N
     return pair_rows, best_same
 
 
+def _best_per_level(all_runs: dict) -> dict | None:
+    """Each level's fastest successful run, with the seconds of all its
+    successful runs in ``all_secs``; None if some level has none."""
+    results = {}
+    for level, runs in all_runs.items():
+        ok = [r for r in runs if r is not None]
+        if not ok:
+            return None
+        best = dict(min(ok, key=lambda r: r["sec"]))
+        best["all_secs"] = sorted(s for r in ok for s in r["all_secs"])
+        results[level] = best
+    return results
+
+
+def _exit_partial(mode: str, all_runs: dict) -> None:
+    """Report a protocol run in which some level never succeeded: print
+    what did complete as one JSON line, then exit non-zero."""
+    print(
+        json.dumps(
+            {
+                "mode": mode,
+                "partial": True,
+                "error": "no successful run at level(s) "
+                + ", ".join(str(k) for k, runs in all_runs.items() if not any(runs)),
+                "runs": all_runs,
+            }
+        )
+    )
+    sys.exit(1)
+
+
 def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
     """North-rule evidence: identical replay at N and 4N cores, fresh JVM each.
 
@@ -414,14 +458,14 @@ def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
     """
     _use_tmpfs_scratch()
     events_dir = os.path.join(tempfile.gettempdir(), f"bench_events_{CDC_EVENTS}_{CDC_FILLER}")
-    all_runs: dict[int, list[dict]] = {n_lo: [], n_hi: []}
+    all_runs: dict[int, list[dict | None]] = {n_lo: [], n_hi: []}
     for _p in range(pairs):
         for cores in (n_lo, n_hi):
             # don't start a timed child inside a degraded-paging window
             _wait_healthy_host(
                 timeout_s=float(os.environ.get("BENCH_SCALING_WAIT_SEC", "1800"))
             )
-            out = tempfile.mktemp(suffix=".json")
+            out = _temp_file(".json")
             env = dict(
                 os.environ,
                 SPARK_GRAFT_CPUS=str(cores),
@@ -437,14 +481,10 @@ def main_scaling(n_lo: int = 8, n_hi: int = 32, pairs: int = 2) -> None:
                 env,
                 out,
             )
-            if rec is not None:
-                all_runs[cores].append(rec)
-    results = {}
-    for cores, runs in all_runs.items():
-        best = min(runs, key=lambda r: r["sec"])
-        best = dict(best)
-        best["all_secs"] = sorted(s for r in runs for s in r["all_secs"])
-        results[cores] = best
+            all_runs[cores].append(rec)
+    results = _best_per_level(all_runs)
+    if results is None:
+        _exit_partial("scaling", all_runs)
     lo, hi = results[n_lo], results[n_hi]
     per_core_lo = lo["events_per_sec"] / n_lo
     per_core_hi = hi["events_per_sec"] / n_hi
@@ -511,13 +551,13 @@ def main_scaling_executors(n_lo: int = 1, n_hi: int = 4, exec_cores: int = 4, pa
         )
     events_dir = os.path.join(tempfile.gettempdir(), f"bench_events_{CDC_EVENTS}_{CDC_FILLER}")
     spark_submit = shutil.which("spark-submit") or "spark-submit"
-    all_runs: dict[int, list[dict]] = {n_lo: [], n_hi: []}
+    all_runs: dict[int, list[dict | None]] = {n_lo: [], n_hi: []}
     for _p in range(pairs):
         for n_exec in (n_lo, n_hi):
             _wait_healthy_host(
                 timeout_s=float(os.environ.get("BENCH_SCALING_WAIT_SEC", "1800"))
             )
-            out = tempfile.mktemp(suffix=".json")
+            out = _temp_file(".json")
             total_cores = n_exec * exec_cores
             # per-executor memory is FIXED across levels (a real cluster's
             # aggregate memory scales with executor count — exactly the
@@ -552,13 +592,10 @@ def main_scaling_executors(n_lo: int = 1, n_hi: int = 4, exec_cores: int = 4, pa
                 env,
                 out,
             )
-            if rec is not None:
-                all_runs[n_exec].append(rec)
-    results = {}
-    for n_exec, runs in all_runs.items():
-        best = dict(min(runs, key=lambda r: r["sec"]))
-        best["all_secs"] = sorted(s for r in runs for s in r["all_secs"])
-        results[n_exec] = best
+            all_runs[n_exec].append(rec)
+    results = _best_per_level(all_runs)
+    if results is None:
+        _exit_partial("scaling-executors", all_runs)
     lo, hi = results[n_lo], results[n_hi]
     per_exec_lo = lo["events_per_sec"] / n_lo
     per_exec_hi = hi["events_per_sec"] / n_hi

@@ -783,7 +783,7 @@ def _ivfpq_index_meta_path(path: str) -> str:
 def _atomic_json_dump(path: str, payload: dict) -> None:
     """Index-metadata persist — delegates to the repo's ONE durable
     overwrite ritual (lake.table._atomic_replace_json: fsync'd tmp +
-    atomic replace + dir fsync), same as the checkpoint watermark."""
+    atomic replace + dir fsync), same as the change-feed cursors."""
     from data_exchange_routing_spark.lake.table import _atomic_replace_json
 
     _atomic_replace_json(path, payload)

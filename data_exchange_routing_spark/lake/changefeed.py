@@ -11,8 +11,7 @@ this repo's snapshot format):
 
 - A consumer is (table, consumer_id) with a durable CURSOR — the last table
   version whose changes it has fully processed — persisted as one JSON file
-  via atomic replace (same durability contract as the replay checkpoint log,
-  pipeline.py).
+  via atomic replace (lake.table._atomic_replace_json).
 - ``process_available(fn)`` hands ``fn`` the batch of change rows in
   (cursor, head] (via ``LakeTable.read_changes``, which reconstructs deltas
   across compactions) plus the version range, then advances the cursor ONLY

@@ -270,10 +270,9 @@ def _bounded_str_range(lo: str, hi: str, limit: int = _STR_STATS_MAX) -> list[st
 def _atomic_replace_json(path: str, payload: dict | list) -> None:
     """Durable OVERWRITE publish (contrast _atomic_write_json's exclusive
     create): fsync'd tmp + atomic replace + parent-dir fsync. The ONE
-    persist ritual for every overwritable metadata file (checkpoint
-    watermark, ANN index metadata, partition specs, column defaults,
-    change-feed cursors, the promoted-key registry) — a durability/schema
-    change lands here once."""
+    persist ritual for every overwritable metadata file (ANN index
+    metadata, partition specs, column defaults, change-feed cursors, the
+    promoted-key registry) — a durability/schema change lands here once."""
     d = os.path.dirname(path)
     fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
     try:

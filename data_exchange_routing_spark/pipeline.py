@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import threading
 import time
 
@@ -45,6 +44,8 @@ from data_exchange_routing_spark.lake.table import (
     LSN_COL,
     LakeTable,
     _atomic_replace_json,
+    _dec_epochs,
+    _enc_epochs,
 )
 from data_exchange_routing_spark.operators.dedup import fused_local_dedup_extract
 from data_exchange_routing_spark.operators.parse import (
@@ -81,7 +82,7 @@ _PROMOTE_LOCK = threading.Lock()
 
 
 class Warehouse:
-    """A directory of lake tables + replay checkpoints."""
+    """A directory of lake tables; replay progress lives in their guards."""
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         self.spark = spark
@@ -101,113 +102,60 @@ class Warehouse:
         LakeTable.create(self.spark, self.table_path("dead_letter"), DEAD_LETTER)
         LakeTable.create(self.spark, self.table_path("lineage_metrics"), LINEAGE_METRICS)
 
-    # ---- checkpoint log: epoch N fully applied (offsets WAL analog, T3) ----
-    def checkpoint_path(self, epoch_id: int) -> str:
-        return os.path.join(self.root, "_checkpoints", f"epoch-{epoch_id:08d}.json")
+    # ---- replay progress: the lineage table's epoch guards (T3) ----
+    # apply_epoch commits lineage_metrics LAST, so epoch N is done exactly
+    # when N is in that snapshot's "lineage" guard. The guard is stored as
+    # {w, extra} (contiguous prefix 0..w plus out-of-order ids), so progress
+    # stays O(1) bytes at any epoch count. A bootstrapped consumer's vouch
+    # floor rides in the same snapshot under the "vouched" guard key, and
+    # the "stream" key marks a warehouse whose guard holds streaming batch
+    # ids (stream_ingest), not WAL segments.
 
-    def _checkpoint_watermark_path(self) -> str:
-        return os.path.join(self.root, "_checkpoints", "watermark.json")
-
-    def _watermark_state(self) -> tuple[int, int]:
-        """(watermark, vouched_floor). Watermark: every epoch below it is
-        durably done-or-vouched (ONE file instead of one mark per epoch).
-        Vouched floor: the highest WAL-truncation point a bootstrap ever
-        vouched past — epochs below it were NEVER applied here (a snapshot
-        import covers them), so rollback must not "un-do" them. A torn or
-        corrupt file degrades to (0, 0) with a loud warning instead of
-        crashing every replay. For the DONE half that is safe-just-slower
-        (per-table epoch guards make redelivered epochs no-ops); the VOUCH
-        half cannot be re-derived — a bootstrapped consumer over a
-        truncated WAL will hit the missing-epoch guard until it re-vouches
-        by re-running replay with from_epoch at the truncation point (the
-        warning says exactly that)."""
-        try:
-            with open(self._checkpoint_watermark_path()) as f:
-                d = json.load(f)
-            return int(d["watermark"]), int(d.get("vouched_floor", 0))
-        except FileNotFoundError:
-            return 0, 0
-        except (ValueError, KeyError, TypeError) as exc:
-            print(
-                f"# WARNING: corrupt checkpoint watermark ({exc}); treating "
-                "as (0, 0). Done-ness re-derives safely (epoch guards make "
-                "redelivery a no-op); a BOOTSTRAPPED consumer over a "
-                "truncated WAL must re-vouch by re-running replay with "
-                "from_epoch at the truncation point",
-                file=sys.stderr,
-            )
-            return 0, 0
-
-    def checkpoint_watermark(self) -> int:
-        return self._watermark_state()[0]
+    def _progress(self) -> tuple[dict, int]:
+        """(the encoded "lineage" guard, the vouched floor)."""
+        guards = self.table("lineage_metrics").snapshot().committed_epochs
+        lineage = guards.get("lineage", [])
+        if not isinstance(lineage, dict):
+            lineage = _enc_epochs(set(lineage))
+        return lineage, guards.get("vouched", {}).get("w", -1) + 1
 
     def checkpoint_vouched_floor(self) -> int:
-        return self._watermark_state()[1]
-
-    def _write_watermark(self, version: int, vouched_floor: int) -> None:
-        """Durable watermark publish (fsync'd atomic replace via the shared
-        lake helper), so the unlink of the marks it supersedes never races
-        a not-yet-persisted rename (the two-representation crash-safety
-        argument needs the watermark ON DISK before marks disappear)."""
-        _atomic_replace_json(
-            self._checkpoint_watermark_path(),
-            {"watermark": version, "vouched_floor": vouched_floor},
-        )
-
-    def mark_epoch_done(self, epoch_id: int, stats: dict) -> None:
-        with open(self.checkpoint_path(epoch_id), "w") as f:
-            json.dump({"epoch_id": epoch_id, **stats}, f)
-
-    def _checkpoint_marks(self) -> set[int]:
-        d = os.path.join(self.root, "_checkpoints")
-        return {
-            int(f[len("epoch-") : -len(".json")])
-            for f in os.listdir(d)
-            if f.startswith("epoch-") and f.endswith(".json")
-        }
+        """The highest WAL-truncation point a bootstrap ever vouched past:
+        epochs below it were NEVER applied here (a snapshot import covers
+        them), yet count as done."""
+        return self._progress()[1]
 
     def completed_epochs(self) -> set[int]:
-        return set(range(self.checkpoint_watermark())) | self._checkpoint_marks()
+        lineage, vouched = self._progress()
+        return _dec_epochs(lineage) | set(range(vouched))
 
-    def compact_checkpoints(self, floor: int | None = None) -> dict:
-        """Fold the contiguous prefix of per-epoch mark files into the
-        single watermark file. At 10^10-event scale the replay accrues one
-        tiny mark per epoch (10^4-10^5 files) and every replay start pays
-        an O(marks) directory listing; after compaction the checkpoint
-        state is one watermark file plus only the out-of-order tail.
-        Crash-safe: the watermark is advanced (fsync'd atomic replace,
-        monotone) BEFORE marks are unlinked, and ``completed_epochs`` is
-        the union of both representations — a crash between the two steps
-        only leaves redundant marks, never forgets an epoch.
+    def vouch(self, floor: int) -> None:
+        """Record that epochs below ``floor`` are not this consumer's to
+        apply. Pass it ONLY for WAL positions that genuinely cannot need
+        applying here (replay derives it as min(from_epoch,
+        truncated_before(events_dir))). A metadata-only commit to
+        lineage_metrics under the monotonic "vouched" guard, made only when
+        the floor rises: a steady-state call writes nothing."""
+        if floor > 0:
+            self._mark_progress("vouched", floor - 1)
 
-        ``floor`` vouches that epochs below it are not this consumer's
-        responsibility — pass it ONLY for WAL positions that genuinely
-        cannot need applying here (replay derives it as
-        min(from_epoch, truncated_before(events_dir)), so a typo'd
-        from_epoch over a non-truncated log vouches nothing and stays
-        recoverable by a plain re-run). The vouched floor persists in the
-        watermark file so rollback never "un-does" bootstrapped-over
-        epochs. The returned ``done`` set is the post-compaction
-        completed-epoch set — callers that just listed the directory
-        (replay) reuse it instead of paying a second O(marks) listing."""
-        marks = self._checkpoint_marks()
-        old, old_vouch = self._watermark_state()
-        vouch = max(old_vouch, floor or 0)
-        w = max(old, vouch)
-        while w in marks:
-            w += 1
-        done = set(range(max(w, old))) | marks
-        if w <= old and vouch <= old_vouch:
-            return {"watermark": old, "marks_removed": 0, "done": done}
-        self._write_watermark(w, vouch)  # w >= old by construction
-        removed = 0
-        for e in sorted(marks):
-            if e < w:
-                p = self.checkpoint_path(e)
-                if os.path.exists(p):
-                    os.unlink(p)
-                    removed += 1
-        return {"watermark": w, "marks_removed": removed, "done": done}
+    def mark_stream_fed(self) -> None:
+        """Record that the lineage guard holds Structured Streaming batch
+        ids (``stream_ingest``), which are no WAL segment position."""
+        self._mark_progress("stream", 0)
+
+    def stream_fed(self) -> bool:
+        snap = self.table("lineage_metrics").snapshot()
+        return "stream" in snap.committed_epochs
+
+    def _mark_progress(self, key: str, epoch_id: int) -> None:
+        t = self.table("lineage_metrics")
+        snap = t.snapshot()
+        if not snap.epoch_committed(key, epoch_id):
+            t.commit_staged_files(
+                [], snap.schema(), epoch_id=epoch_id, source=key,
+                summary={"operation": key}, epoch_monotonic=True,
+            )
 
     # ---- cross-table snapshot isolation (warehouse-level consistent cuts) --
     # Each table commits atomically on its own, but an epoch touches SEVERAL
@@ -346,44 +294,28 @@ class Warehouse:
 
     def rollback_to(self, tag: str) -> dict:
         """Disaster recovery: roll every table back to a published consistent
-        cut (see ``publish_snapshot``), then drop the replay checkpoint marks
-        of the undone epochs so the next ``replay()`` redelivers them and
-        reconverges. Each table rollback is individually atomic (Iceberg
-        semantics — a new snapshot with the old content, guards rewound);
-        a crash partway is healed by re-running this call, and readers in
-        between see per-table states that are all AT OR BEFORE the cut."""
+        cut (see ``publish_snapshot``). Each table rollback is individually
+        atomic (Iceberg semantics — a new snapshot with the old content,
+        guards rewound), so rewinding lineage_metrics also rewinds replay
+        progress (and the vouch floor with it) and the next ``replay()``
+        redelivers the undone epochs and reconverges. lineage_metrics rolls
+        back FIRST: after a crash partway the undone epochs already read as
+        not done, so a replay redelivers them instead of skipping them, and
+        re-running this call finishes the rollback; readers in between see
+        per-table states all AT OR BEFORE the cut. A cut taken before
+        lineage_metrics existed held no applied epoch, so that table rolls
+        back to its empty first version.
+        Returns ``undone_epochs``: the lineage-guard epochs the rollback
+        removed."""
         pins = self._load_pins(tag)
+        pins["lineage_metrics"] = max(pins.get("lineage_metrics", 0), 1)
+        before = self.table("lineage_metrics").snapshot().epochs("lineage")
         out = {}
-        for name, v in sorted(pins.items()):
+        for name, v in sorted(pins.items(), key=lambda kv: kv[0] != "lineage_metrics"):
             if v > 0:
                 out[name] = self.table(name).rollback(v)
-        # epochs committed at the cut (any destination carries the cdc set)
-        dest = next(n for n in sorted(pins) if n in set(DESTINATION_TABLES))
-        snap = self.table(dest).snapshot(pins[dest])
-        kept = snap.epochs("cdc")
-        # epochs being undone may live BELOW the compacted checkpoint
-        # watermark (no mark file to unlink). Lower the watermark to the
-        # first undone epoch, re-materializing marks for the still-done
-        # epochs above it FIRST so a crash between the two steps only
-        # leaves redundant state (completed_epochs is the union).
-        wm, vouch = self._watermark_state()
-        # epochs below the vouched floor were NEVER applied here (a
-        # bootstrap snapshot covers them) — they are not "undone" by a
-        # rollback and the vouching must survive it, or the next plain
-        # replay would demand a truncated WAL's missing epochs
-        undone_below = sorted(e for e in range(vouch, wm) if e not in kept)
-        if undone_below:
-            new_wm = undone_below[0]
-            for e in range(new_wm, wm):
-                if e in kept and not os.path.exists(self.checkpoint_path(e)):
-                    self.mark_epoch_done(e, {"rematerialized_by": "rollback"})
-            self._write_watermark(new_wm, vouch)
-        removed = list(undone_below)  # undone via the watermark lowering
-        for e in sorted(self.completed_epochs()):
-            if e not in kept and os.path.exists(self.checkpoint_path(e)):
-                os.unlink(self.checkpoint_path(e))
-                removed.append(e)
-        return {"tables": out, "checkpoints_removed": sorted(set(removed))}
+        after = self.table("lineage_metrics").snapshot().epochs("lineage")
+        return {"tables": out, "undone_epochs": sorted(before - after)}
 
     # ---------------------------------------------- snapshot-keyed results
     def cached_result(
@@ -571,8 +503,7 @@ class Warehouse:
 
     def register_promote_keys(self, keys: list[str]) -> list[str]:
         """Union new keys into the registry (atomic replace; concurrent epochs
-        serialize on the module lock — single-driver process, like the
-        checkpoint log)."""
+        serialize on the module lock — single-driver process)."""
         with _PROMOTE_LOCK:
             merged = sorted(set(self.known_promote_keys()) | set(keys))
             _atomic_replace_json(self._promote_registry_path(), merged)
@@ -842,7 +773,8 @@ def replay(
     max_concurrent_epochs: int = 4,
 ) -> dict:
     """Bounded replay of a partitioned event log (binlog-segment dirs
-    epoch_hint=K/), resuming from the checkpoint log. The streaming variant
+    epoch_hint=K/), resuming from the lineage table's epoch guard (see
+    ``Warehouse.completed_epochs``). The streaming variant
     (streaming/ingest.py) drives the same apply_epoch via foreachBatch.
     ``from_epoch`` starts the tail at a given segment — the switchover
     position after a snapshot bootstrap (operators/bootstrap.py).
@@ -851,9 +783,9 @@ def replay(
     (warc_ts, lsn) makes delta commits order-independent — the final state is
     identical whatever order epochs land in — so one epoch's driver-side
     commit/barrier time overlaps another's executor compute. Exactly-once is
-    untouched (per-table per-epoch guards + optimistic commit retry); each
-    epoch still gets its own durable checkpoint mark. Compaction (when
-    requested) runs at quiesce points.
+    untouched (per-table per-epoch guards + optimistic commit retry); an
+    epoch counts as done once its lineage commit, the last of the epoch,
+    has landed. Compaction (when requested) runs at quiesce points.
     """
     spark = wh.spark
     wh.init_tables()
@@ -861,22 +793,24 @@ def replay(
     from data_exchange_routing_spark.sources.pyds import truncated_before
 
     floor = truncated_before(events_dir)
-    # fold the contiguous done-prefix into the single watermark file so the
-    # checkpoint dir stays O(out-of-order tail), not O(total epochs). The
-    # vouch floor is min(from_epoch, WAL truncation point): a bootstrapped
-    # consumer (from_epoch at a truncated position) compacts past epochs
-    # the snapshot import covers, while a typo'd from_epoch over a
-    # NON-truncated log vouches nothing — epochs below it stay un-done and
-    # a plain re-run heals them. The returned done set is reused (one
-    # listing).
-    done = wh.compact_checkpoints(floor=min(start, floor))["done"]
+    # The vouch floor is min(from_epoch, WAL truncation point): a
+    # bootstrapped consumer (from_epoch at a truncated position) vouches
+    # past the epochs the snapshot import covers, while a typo'd from_epoch
+    # over a NON-truncated log vouches nothing — epochs below it stay
+    # un-done and a plain re-run heals them.
+    wh.vouch(min(start, floor))
+    done = wh.completed_epochs()
     missing = [e for e in range(start, floor) if e not in done]
     if missing:
         raise ValueError(
             f"event log truncated before epoch {floor} but this consumer has "
             f"not applied epochs {missing[:5]}{'...' if len(missing) > 5 else ''}; "
             "bootstrap from a table snapshot (operators/bootstrap.py) and "
-            f"replay with from_epoch>={floor}"
+            f"replay with from_epoch>={floor}. A warehouse bootstrapped "
+            "under the older _checkpoints/ progress files lost its vouch "
+            f"with them: re-run replay(from_epoch={floor}) once; its "
+            "_checkpoints/epoch-*.json and watermark.json are unused and "
+            "may be deleted"
         )
     epochs = sorted(
         int(d.split("=", 1)[1])
@@ -893,8 +827,7 @@ def replay(
 
     def run_one(e: int) -> int:
         events = spark.read.parquet(os.path.join(events_dir, f"epoch_hint={e}"))
-        stats = apply_epoch(wh, events, epoch_id=e)
-        wh.mark_epoch_done(e, {"n_destinations": len(stats["destinations"])})
+        apply_epoch(wh, events, epoch_id=e)
         return e
 
     from concurrent.futures import ThreadPoolExecutor
@@ -915,11 +848,16 @@ def replay(
 
 
 def applied_watermark(wh: Warehouse) -> int:
-    """The replay checkpoint's contiguous low watermark: the smallest epoch
-    NOT yet applied (every epoch below it is durably done)."""
-    done = wh.completed_epochs()
-    n = 0
-    while n in done:
+    """The contiguous low watermark of replay progress: the smallest epoch
+    NOT yet applied (every epoch below it is durably done or vouched). Read
+    straight off the encoded lineage guard: its prefix ``w`` plus one,
+    raised to the vouch floor and walked through the out-of-order ids. On a
+    stream-fed warehouse (``Warehouse.stream_fed``) the ids are streaming
+    batch ids, so this is no WAL position there."""
+    lineage, vouched = wh._progress()
+    n = max(lineage.get("w", -1) + 1, vouched)
+    extra = set(lineage.get("extra", []))
+    while n in extra:
         n += 1
     return n
 
@@ -931,11 +869,28 @@ def truncate_wal(
     consumers have passed. The floor is the min of this warehouse's applied
     watermark and any ``extra_consumer_positions`` (e.g. a streaming
     checkpoint's next_epoch, a downstream mirror's cursor) — pass every
-    consumer or the lagging one loses data it has not read."""
+    consumer or the lagging one loses data it has not read.
+
+    Stream-fed warehouses: ``stream_ingest`` records Structured Streaming
+    batch ids in the same lineage guard, and a segment can take several
+    batches (``max_files_per_trigger``, no-data watermark batches), so the
+    applied watermark there counts batches and can run ahead of the
+    segments read. The stream's own cursor is the only safe floor: such a
+    warehouse refuses a call without ``extra_consumer_positions`` and
+    ignores its applied watermark."""
     from data_exchange_routing_spark.sources.pyds import truncate_binlog
 
-    floor = min([applied_watermark(wh), *map(int, extra_consumer_positions)])
-    return truncate_binlog(events_dir, floor)
+    positions = [int(p) for p in extra_consumer_positions]
+    if wh.stream_fed():
+        if not positions:
+            raise ValueError(
+                "stream-fed warehouse: its lineage guard counts streaming "
+                "batches, not WAL segments; pass the stream's cursor (its "
+                "next_epoch offset) in extra_consumer_positions"
+            )
+    else:
+        positions.append(applied_watermark(wh))
+    return truncate_binlog(events_dir, min(positions))
 
 
 def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
@@ -948,7 +903,10 @@ def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
     with ok=False if any expected table is missing/unreadable. Pass
     ``events_dir`` to include the WAL's state (surviving segments, truncation
     floor, this warehouse's applied watermark and its lag behind the log
-    head) — the numbers an ops loop alarms on."""
+    head) — the numbers an ops loop alarms on. A stream-fed warehouse's
+    guard counts streaming batches, not segments (see ``truncate_wal``), so
+    there ``applied_watermark`` and ``lag_epochs`` are None: only the
+    stream's cursor knows its position."""
     expected = sorted(set(DESTINATION_TABLES)) + ["dead_letter", "lineage_metrics"]
     out: dict = {"ok": True, "tables": {}}
     for name in expected:
@@ -973,13 +931,13 @@ def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
                 for d in os.listdir(events_dir)
                 if d.startswith("epoch_hint=")
             )
-            wm = applied_watermark(wh)
+            wm = None if wh.stream_fed() else applied_watermark(wh)
             head = (segs[-1] + 1) if segs else truncated_before(events_dir)
             out["wal"] = {
                 "segments": len(segs),
                 "truncated_before": truncated_before(events_dir),
                 "applied_watermark": wm,
-                "lag_epochs": max(0, head - wm),
+                "lag_epochs": None if wm is None else max(0, head - wm),
             }
         except Exception as e:  # noqa: BLE001
             out["ok"] = False
@@ -1097,7 +1055,8 @@ def maintain(
     ``wal_events_dir`` adds WAL retention to the cycle: event-log segments
     below every consumer's position are garbage-collected (see
     ``truncate_wal``; pass streaming cursors via
-    ``wal_extra_consumer_positions``).
+    ``wal_extra_consumer_positions``, without which a stream-fed warehouse
+    refuses).
 
     ``staging_min_age_s`` (default 1 h; ``None`` opts out) runs the
     warehouse staging GC each cycle: unreferenced UNMARKED staging dirs

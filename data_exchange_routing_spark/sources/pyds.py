@@ -384,7 +384,8 @@ def truncated_before(path: str) -> int:
 def truncate_binlog(path: str, before_epoch: int) -> dict:
     """WAL retention (binlog log GC): delete segment dirs with epoch <
     ``before_epoch`` — call it only with a floor every consumer has passed
-    (``pipeline.truncate_wal`` derives one from the replay checkpoint).
+    (``pipeline.truncate_wal`` derives one from the replay's applied
+    watermark, which the lineage table's epoch guard holds).
 
     Crash-safe ordering: the floor marker is published FIRST (atomic
     tmp+rename), then victim dirs are removed — a crash in between leaves a
@@ -392,7 +393,7 @@ def truncate_binlog(path: str, before_epoch: int) -> dict:
     authoritative floor, so nothing is ever double-read or silently skipped.
     The streaming binlog source needs no marker (a fresh checkpoint starts
     at the first surviving segment and offset ranges skip gaps), but
-    ``pipeline.replay`` refuses a fresh/behind checkpoint whose missing
+    ``pipeline.replay`` refuses a fresh/behind warehouse whose missing
     epochs were truncated — those consumers bootstrap from a table snapshot
     (operators/bootstrap.py) instead of reading a hole."""
     import shutil

@@ -83,8 +83,17 @@ def stream_ingest(
     watermark; a redelivery beyond it just falls through to the idempotent
     MERGE, which absorbs it (T1/T2). Per-(warc_ts,lsn) LAST-WRITER dedup of
     distinct events still happens inside apply_epoch — the built-in keeps
-    the first arrival, which for identical payloads is the same row."""
+    the first arrival, which for identical payloads is the same row.
+
+    Each batch id lands in the warehouse's lineage guard like a replay
+    epoch id, so ``applied_watermark(wh)`` counts batches here, and one
+    segment can take several batches (``max_files_per_trigger``, no-data
+    watermark batches). The warehouse is marked stream-fed
+    (``Warehouse.mark_stream_fed``): ``truncate_wal`` then refuses to run
+    without this stream's cursor (its ``next_epoch`` offset), the only safe
+    WAL floor, and ``warehouse_health`` reports no watermark."""
     wh.init_tables()
+    wh.mark_stream_fed()
     if source == "binlog":
         from data_exchange_routing_spark.sources.pyds import register_sources
 

@@ -9,7 +9,7 @@ import os
 import pandas as pd
 import pytest
 
-from data_exchange_routing_spark.pipeline import Warehouse, replay
+from data_exchange_routing_spark.pipeline import Warehouse, apply_epoch, replay
 from data_exchange_routing_spark.sources.configs import DESTINATION_TABLES
 from data_exchange_routing_spark.sources.datagen import write_change_events
 from tests.oracle import oracle_dead_letter_counts, oracle_final_states
@@ -29,6 +29,13 @@ def events_dir(spark, tmp_path_factory):
 @pytest.fixture(scope="module")
 def events_pdf(spark, events_dir) -> pd.DataFrame:
     return spark.read.parquet(events_dir).toPandas()
+
+
+def _redeliver(spark, wh: Warehouse, events_dir: str, epoch: int) -> dict:
+    """At-least-once redelivery of one whole segment, straight through
+    apply_epoch (replay itself skips epochs its lineage guard holds)."""
+    events = spark.read.parquet(os.path.join(events_dir, f"epoch_hint={epoch}"))
+    return apply_epoch(wh, events, epoch_id=epoch)
 
 
 def _assert_state_equal(spark, wh: Warehouse, events_pdf: pd.DataFrame):
@@ -84,19 +91,47 @@ def test_full_replay_matches_oracle(spark, events_dir, events_pdf, tmpdir_path):
 
 
 def test_replay_is_idempotent(spark, events_dir, events_pdf, tmpdir_path):
-    """Re-running the full replay (at-least-once redelivery of every epoch)
-    changes nothing: epoch guards skip every commit."""
+    """Redelivering every epoch after a full replay (at-least-once delivery)
+    changes nothing: epoch guards skip every commit, and a re-run replay
+    has nothing left to apply."""
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=8)
     replay(wh, events_dir)
-    v_before = {d: wh.table(d).current_version() for d in set(DESTINATION_TABLES)}
-    # wipe the checkpoint log to force reprocessing through the epoch guards
-    for f in os.listdir(os.path.join(wh.root, "_checkpoints")):
-        os.unlink(os.path.join(wh.root, "_checkpoints", f))
-    res2 = replay(wh, events_dir)
-    assert res2["applied_epochs"] == list(range(N_EPOCHS))
-    for d in set(DESTINATION_TABLES):
+    tables = set(DESTINATION_TABLES) | {"dead_letter", "lineage_metrics"}
+    v_before = {d: wh.table(d).current_version() for d in tables}
+    for e in range(N_EPOCHS):
+        stats = _redeliver(spark, wh, events_dir, e)
+        assert all(r["skipped"] for r in stats["destinations"].values())
+    assert replay(wh, events_dir)["applied_epochs"] == []
+    for d in tables:
         assert wh.table(d).current_version() == v_before[d], f"{d} re-committed"
     _assert_state_equal(spark, wh, events_pdf)
+
+
+def test_epoch_applied_outside_replay_is_not_restaged(
+    spark, events_dir, tmpdir_path, monkeypatch
+):
+    """An epoch whose commits all landed is done, even when replay never
+    saw it finish (a crash right after its lineage commit): replay reads
+    progress from the lineage guard, so it neither re-applies nor re-stages
+    that epoch, and it keeps no per-epoch progress file of its own."""
+    import data_exchange_routing_spark.pipeline as P
+
+    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_precommitted"), n_buckets=8)
+    wh.init_tables()
+    _redeliver(spark, wh, events_dir, 0)
+
+    calls: list[int] = []
+    orig = P.stage_multicast_delta
+
+    def counting(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(P, "stage_multicast_delta", counting)
+    res = replay(wh, events_dir, stop_after_epoch=1, max_concurrent_epochs=1)
+    assert res["applied_epochs"] == [1] and res["skipped_epochs"] == [0]
+    assert len(calls) == 1, f"expected 1 staging pass (epoch 1 only), got {len(calls)}"
+    assert os.listdir(os.path.join(wh.root, "_checkpoints")) == ["promoted_meta_keys.json"]
 
 
 def test_resume_from_checkpoint_converges(spark, events_dir, events_pdf, tmpdir_path):
@@ -270,10 +305,9 @@ def test_staging_vacuum_reclaims_redelivery_leak(spark, events_dir, tmpdir_path)
     want = sorted(tuple(r) for r in wh.table("web_pages").read().collect())
 
     # redeliver every epoch: guards skip all commits, staging dirs leak
-    for p in os.listdir(os.path.join(wh.root, "_checkpoints")):
-        os.unlink(os.path.join(wh.root, "_checkpoints", p))
-    out = replay(wh, events_dir, max_concurrent_epochs=1)
-    assert out["applied_epochs"]  # re-marked (commits were no-ops)
+    for e in range(N_EPOCHS):
+        stats = _redeliver(spark, wh, events_dir, e)
+        assert all(r["skipped"] for r in stats["destinations"].values())
     leaked = set(os.listdir(staging)) - committed_dirs
     assert leaked, "redelivery should have staged fresh dirs"
 

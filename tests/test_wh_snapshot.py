@@ -2,7 +2,7 @@
 
 import pytest
 
-from data_exchange_routing_spark.pipeline import Warehouse, replay
+from data_exchange_routing_spark.pipeline import Warehouse, applied_watermark, replay
 from data_exchange_routing_spark.schemas import WEB_PAGES
 from data_exchange_routing_spark.sources.configs import DESTINATION_TABLES
 from data_exchange_routing_spark.sources.datagen import write_change_events
@@ -86,7 +86,7 @@ def test_rollback_to_tag_then_replay_reconverges(spark, tmp_path):
     assert want_full != want_cut
 
     res = wh.rollback_to("good")
-    assert set(res["checkpoints_removed"]) == {1, 2}
+    assert res["undone_epochs"] == [1, 2]
     assert _norm(wh.table("web_pages").read()) == want_cut
     # guards rewound on every pipeline table — the cut's epoch set only
     assert wh.table("dead_letter").snapshot().epochs("dead_letter") == {0}
@@ -94,6 +94,37 @@ def test_rollback_to_tag_then_replay_reconverges(spark, tmp_path):
 
     # the undone epochs redeliver and the warehouse reconverges exactly
     replay(wh, events, max_concurrent_epochs=1)
+    assert _norm(wh.table("web_pages").read()) == want_full
+
+
+def test_rollback_to_cut_taken_before_lineage_existed(spark, tmp_path):
+    """A cut published right after bootstrapping the destinations, before
+    replay created lineage_metrics, holds no applied epoch: rollback_to
+    rewinds replay progress with the destinations, so the tail epochs
+    redeliver and the warehouse reconverges."""
+    from data_exchange_routing_spark.lake.table import LakeTable
+    from data_exchange_routing_spark.operators.bootstrap import bootstrap_destination
+
+    wh, events = _mk_wh(spark, tmp_path, n_epochs=3)
+    src = Warehouse(spark, str(tmp_path / "src"), n_buckets=8)
+    replay(src, events, stop_after_epoch=0, max_concurrent_epochs=1)
+    for dest in sorted(set(DESTINATION_TABLES)):
+        t = LakeTable.create(spark, wh.table_path(dest), WEB_PAGES, key="url", n_buckets=8)
+        snap = src.table(dest).read(with_internal=True, include_tombstones=True)
+        bootstrap_destination(t, snap)
+    assert "lineage_metrics" not in wh.publish_snapshot("boot")
+    want_cut = _norm(wh.table("web_pages").read())
+    out = replay(wh, events, from_epoch=1, max_concurrent_epochs=1)
+    assert out["applied_epochs"] == [1, 2]
+    want_full = _norm(wh.table("web_pages").read())
+    assert want_full != want_cut
+
+    res = wh.rollback_to("boot")
+    assert res["undone_epochs"] == [1, 2]
+    assert wh.completed_epochs() == set()
+    assert _norm(wh.table("web_pages").read()) == want_cut
+    out = replay(wh, events, from_epoch=1, max_concurrent_epochs=1)
+    assert out["applied_epochs"] == [1, 2]
     assert _norm(wh.table("web_pages").read()) == want_full
 
 
@@ -129,11 +160,10 @@ def test_cached_result_hits_until_input_commits(spark, tmp_path):
 
 
 def test_checkpoint_compaction_watermark_and_rollback_below_it(spark, tmp_path):
-    """compact_checkpoints folds the contiguous done-prefix of per-epoch
-    mark files into ONE watermark file (at 10^5 epochs the checkpoint dir
-    otherwise costs an O(marks) listing per replay start); resume-skip,
-    rollback and reconvergence all keep working THROUGH the compacted
-    representation — including rollback to a cut BELOW the watermark."""
+    """Replay progress is the lineage guard, stored as its contiguous
+    prefix {w, extra}: resume skips the prefix, and a rollback to a cut
+    BELOW it rewinds the guard, so the undone epochs redeliver and the
+    warehouse reconverges exactly."""
     import os
 
     wh, events = _mk_wh(spark, tmp_path, n_epochs=3)
@@ -141,45 +171,36 @@ def test_checkpoint_compaction_watermark_and_rollback_below_it(spark, tmp_path):
     wh.publish_snapshot("good")
     want_cut = _norm(wh.table("web_pages").read())
 
-    # compacting mid-stream: epoch 0 folds into the watermark, and the
-    # resumed replay must still skip it (no redelivery)
-    res0 = wh.compact_checkpoints()
-    assert res0["watermark"] == 1 and res0["marks_removed"] == 1
     out = replay(wh, events, max_concurrent_epochs=1)
     assert out["applied_epochs"] == [1, 2] and out["skipped_epochs"] == [0]
     want_full = _norm(wh.table("web_pages").read())
     assert want_full != want_cut
-
-    res1 = wh.compact_checkpoints()
-    assert res1["watermark"] == 3 and res1["marks_removed"] == 2
-    assert wh.completed_epochs() == {0, 1, 2}
+    lineage = wh.table("lineage_metrics").snapshot().committed_epochs["lineage"]
+    assert lineage == {"w": 2, "extra": []}
+    assert wh.completed_epochs() == {0, 1, 2} and applied_watermark(wh) == 3
     d = os.path.join(wh.root, "_checkpoints")
-    assert not [f for f in os.listdir(d) if f.startswith("epoch-")]
-    res2 = wh.compact_checkpoints()
-    assert (res2["watermark"], res2["marks_removed"]) == (3, 0)
-    assert res2["done"] == {0, 1, 2}  # reusable done set (one listing)
+    assert os.listdir(d) == ["promoted_meta_keys.json"]
 
-    # rollback to a cut entirely below the watermark: the watermark lowers
-    # to the first undone epoch and the undone epochs redeliver exactly
-    wh.rollback_to("good")
-    assert wh.checkpoint_watermark() == 1
+    # rollback to a cut entirely below the prefix: the guard rewinds to
+    # the cut and the undone epochs redeliver exactly
+    res = wh.rollback_to("good")
+    assert res["undone_epochs"] == [1, 2]
+    assert applied_watermark(wh) == 1
     assert wh.completed_epochs() == {0}
     assert _norm(wh.table("web_pages").read()) == want_cut
     replay(wh, events, max_concurrent_epochs=1)
     assert _norm(wh.table("web_pages").read()) == want_full
     assert wh.completed_epochs() == {0, 1, 2}
+    assert os.listdir(d) == ["promoted_meta_keys.json"]
 
 
 def test_checkpoint_compaction_floor_for_bootstrapped_consumers(spark, tmp_path):
-    """Round-3 review: a consumer bootstrapped past a TRUNCATED WAL prefix
-    never applies epoch 0, so an unvouched fold would no-op forever and the
-    checkpoint dir would regrow unbounded. The vouch floor is
-    min(from_epoch, truncation point): over a truncated log the fold starts
-    at the switchover and the vouching survives rollback; over a
-    NON-truncated log a typo'd from_epoch vouches NOTHING and a plain
-    re-run heals the skipped epochs."""
-    import os
-
+    """A consumer bootstrapped past a TRUNCATED WAL prefix never applies
+    epoch 0, so its progress needs a vouch floor. The floor is
+    min(from_epoch, truncation point) and rides in the lineage snapshot's
+    "vouched" guard: over a truncated log it starts at the switchover and
+    survives rollback; over a NON-truncated log a typo'd from_epoch
+    vouches NOTHING and a plain re-run heals the skipped epochs."""
     from data_exchange_routing_spark.sources.pyds import truncate_binlog
 
     # --- typo'd from_epoch over a non-truncated log: recoverable ---------
@@ -194,14 +215,15 @@ def test_checkpoint_compaction_floor_for_bootstrapped_consumers(spark, tmp_path)
     truncate_binlog(events, 1)  # epoch 0 segment GC'd
     replay(wh, events, from_epoch=1, max_concurrent_epochs=1)
     assert wh.checkpoint_vouched_floor() == 1
-    assert wh.checkpoint_watermark() >= 1
-    res = wh.compact_checkpoints()
-    assert res["watermark"] == 3 and res["done"] == {0, 1, 2}
-    d = os.path.join(wh.root, "_checkpoints")
-    assert not [f for f in os.listdir(d) if f.startswith("epoch-")]
-    # plain replay (no from_epoch): bootstrapped-over epoch 0 stays vouched
+    assert wh.completed_epochs() == {0, 1, 2}
+    assert applied_watermark(wh) == 3
+    # plain replay (no from_epoch): bootstrapped-over epoch 0 stays vouched,
+    # and a start whose floor does not rise commits nothing
+    lineage_version = wh.table("lineage_metrics").current_version()
     out = replay(wh, events, max_concurrent_epochs=1)
     assert out["applied_epochs"] == [] and out["skipped_epochs"] == [0, 1, 2]
+    replay(wh, events, from_epoch=1, max_concurrent_epochs=1)
+    assert wh.table("lineage_metrics").current_version() == lineage_version
 
     # --- rollback after bootstrap keeps the vouching ----------------------
     wh.publish_snapshot("cut12")
@@ -213,62 +235,53 @@ def test_checkpoint_compaction_floor_for_bootstrapped_consumers(spark, tmp_path)
     assert out2["applied_epochs"] == []
 
 
-def test_corrupt_watermark_degrades_to_zero_not_crash(spark, tmp_path):
-    """A torn/empty watermark.json must not brick the warehouse: the reader
-    warns and returns 0, and redelivery is safe (per-table epoch guards)."""
-    wh, events = _mk_wh(spark, tmp_path, n_epochs=2)
-    replay(wh, events, max_concurrent_epochs=1)
-    want = _norm(wh.table("web_pages").read())
-    wh.compact_checkpoints()
-    with open(wh._checkpoint_watermark_path(), "w") as f:
-        f.write("")  # torn write
-    assert wh.checkpoint_watermark() == 0
-    out = replay(wh, events, max_concurrent_epochs=1)  # redelivers, guarded
-    assert _norm(wh.table("web_pages").read()) == want
-    assert set(out["applied_epochs"]) == {0, 1}  # re-applied as no-ops
-
-
-def test_checkpoint_watermark_algebra_random_interleavings(tmp_path):
-    """Property: under ANY interleaving of out-of-order epoch marks and
-    (floored) compactions, completed_epochs() equals the reference set of
-    every epoch ever marked (plus floor-vouched prefixes), and compaction
-    never changes it. Pure checkpoint-log algebra — no Spark session."""
+def test_checkpoint_watermark_algebra_random_interleavings():
+    """Property of the guards replay progress is read from: under ANY
+    interleaving of out-of-order ``_enc_add`` epochs (the "lineage" guard)
+    and monotonic ``_enc_add_monotonic`` vouches (the "vouched" guard), the
+    decoded epochs plus the vouched prefix equal the reference set,
+    ``_enc_contains`` agrees, the lineage ``w`` stops exactly at the first
+    gap, and ``applied_watermark`` is the first gap of the union. No Spark
+    session."""
     import random
 
-    from data_exchange_routing_spark.pipeline import Warehouse
+    from data_exchange_routing_spark.lake.table import (
+        _dec_epochs,
+        _enc_add,
+        _enc_add_monotonic,
+        _enc_contains,
+    )
+
+    class _Progress:  # the one Warehouse method applied_watermark reads
+        def __init__(self, lineage, vouched):
+            self.guards = lineage, vouched
+
+        def _progress(self):
+            return self.guards
 
     rng = random.Random(17)
-    for trial in range(20):
-        root = str(tmp_path / f"walg{trial}")
-        wh = Warehouse.__new__(Warehouse)  # skip spark-needing __init__ work
-        wh.spark = None
-        wh.root = root
-        wh.n_buckets = 1
-        import os
-        os.makedirs(os.path.join(root, "_checkpoints"), exist_ok=True)
+    for trial in range(200):
+        lineage: dict = {"w": -1, "extra": []}
+        vouched: object = []  # a fresh table's guard
         reference: set[int] = set()
-        vouched = 0
+        floor = 0
         for _ in range(30):
-            op = rng.random()
-            if op < 0.65:
+            if rng.random() < 0.8:
                 e = rng.randrange(0, 40)
-                wh.mark_epoch_done(e, {"t": trial})
+                lineage = _enc_add(lineage, e)
                 reference.add(e)
-            elif op < 0.85:
-                wh.compact_checkpoints()
             else:
-                floor = rng.randrange(0, 20)
-                wh.compact_checkpoints(floor=floor)
-                vouched = max(vouched, floor)
-            expect = reference | set(range(vouched))
-            # the watermark can only cover marked-or-vouched prefixes
-            got = wh.completed_epochs()
-            assert got == expect, (
-                f"trial {trial}: {sorted(got)} != {sorted(expect)}"
-            )
-        # steady state: contiguous prefix is one file, tail stays as marks
-        wh.compact_checkpoints()
-        w = wh.checkpoint_watermark()
-        expect = reference | set(range(vouched))
-        assert set(range(w)) <= expect
-        assert w not in expect  # watermark stops exactly at the first gap
+                f = rng.randrange(0, 20)
+                vouched = _enc_add_monotonic(vouched, f - 1)
+                floor = max(floor, f)
+            assert _dec_epochs(lineage) == reference, trial
+            assert vouched == [] or vouched == {"w": floor - 1, "extra": []}
+            for e in range(45):
+                assert _enc_contains(lineage, e) == (e in reference), (trial, e)
+            w = lineage["w"]
+            assert set(range(w + 1)) <= reference
+            assert w + 1 not in reference  # the prefix stops at the first gap
+            assert lineage["extra"] == sorted(x for x in reference if x > w)
+            done = reference | set(range(floor))
+            gap = min(set(range(len(done) + 1)) - done)
+            assert applied_watermark(_Progress(lineage, floor)) == gap, trial
