@@ -175,20 +175,22 @@ def iso8601(ts_col: Column) -> Column:
     return F.date_format(ts_col, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
 
 
-def enrich_meta(df: DataFrame, engine_version: str) -> DataFrame:
-    """P6: metadata enrichment projection (RouteIngestedFile.kt:196-209).
+def enriched_meta(engine_version: str) -> Column:
+    """P6: the enriched metadata map (RouteIngestedFile.kt:196-209).
 
     Adds system_provider / upload_id / data_stream_* / ingest timestamp into
     the open metadata map.
     """
-    return df.withColumn(
-        "meta",
-        F.map_concat(
-            F.col("meta"),
-            F.create_map(
-                F.lit("system_provider"), F.lit("DEX-SPARK"),
-                F.lit("engine_version"), F.lit(engine_version),
-                F.lit("dex_ingest_datetime"), iso8601(F.col("ingest_ts")),
-            ),
+    return F.map_concat(
+        F.col("meta"),
+        F.create_map(
+            F.lit("system_provider"), F.lit("DEX-SPARK"),
+            F.lit("engine_version"), F.lit(engine_version),
+            F.lit("dex_ingest_datetime"), iso8601(F.col("ingest_ts")),
         ),
     )
+
+
+def enrich_meta(df: DataFrame, engine_version: str) -> DataFrame:
+    """P6: metadata enrichment projection over every row."""
+    return df.withColumn("meta", enriched_meta(engine_version))

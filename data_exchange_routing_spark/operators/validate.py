@@ -2,8 +2,10 @@
 
 The reference rejects row-by-row, never the whole batch (CHANGELOG 0.0.40
 "better error handling to not reject the entire batch for a single message"),
-so the split is a pair of complementary filters over one computed error
-column — one pass, no task aborts on data errors.
+so validation is one computed error column — no task aborts on data errors.
+The epoch plan reads that column in its single route projection
+(``routing.route_or_dead_letter``); ``split_valid`` is the standalone pair of
+complementary filters over it.
 
 Exact error strings are part of the contract (the reference asserts exact
 messages: Unit_FnDecompressor.kt:88-135).
@@ -49,12 +51,17 @@ def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     error and the stage name, shaped for the dead_letter table."""
     flagged = with_validation_error(df)
     valid = flagged.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    dead = flagged.filter(F.col(ERROR_COL).isNotNull()).select(
+    dead = dead_letter_rows(flagged.filter(F.col(ERROR_COL).isNotNull()), ERROR_COL, "validate")
+    return valid, dead
+
+
+def dead_letter_rows(df: DataFrame, error_col: str, stage: str) -> DataFrame:
+    """Rows shaped for the dead_letter table, with ``stage`` as their stage."""
+    return df.select(
         F.col("url"),
         F.col("lsn"),
-        F.col(ERROR_COL).alias("error"),
-        F.lit("validate").alias("stage"),
+        F.col(error_col).alias("error"),
+        F.lit(stage).alias("stage"),
         F.col("warc_ts"),
         F.col("meta"),
     )
-    return valid, dead

@@ -6,8 +6,10 @@ routeSourceBlobToDestination -> sendProcessingStatus
 (RouteIngestedFile.kt:91-98; pipe: Util.kt:19-21):
 
 1. normalize metadata keys + coalesce routing keys   (P3, P4)
-2. validity split -> dead_letter append              (F1-F2, K3)
-3. broadcast route join -> multicast split           (J1, F3-F4, M1)
+2. validation error column; enrich valid rows' meta  (F1-F2, P6)
+3. broadcast route join (1->N multicast) -> ONE projection giving each row
+   its destination, or 'dead_letter' with its error and stage
+                                                     (J1, F3-F4, M1, K3)
 4. per destination: last-writer-wins dedup           (A-dedup)
 5. vectorized text extraction on surviving rows only (P9 slot)
 6. additive schema evolution from open metadata      (§1.3)
@@ -15,14 +17,18 @@ routeSourceBlobToDestination -> sendProcessingStatus
 8. lineage/metrics rows per (epoch, destination, bucket) (K4-K6)
 
 Error rows never abort the batch (F12, CHANGELOG 0.0.40) — they divert to the
-dead_letter table with exact error strings.
+dead_letter table with exact error strings, through the same staged write as
+the routed rows.
 
-Scale shape per epoch: one scan of the batch, one broadcast join (config
-~5 rows), then ONE shuffle keyed (destination, bucket) whose
-partition-local sort makes last-writer-wins dedup an adjacency filter
-inside the same Arrow pass as text extraction, and O(batch)-sized delta
-file writes written straight from that partitioning — per-epoch cost is
-O(batch), independent of table size (merge-on-read lake layer).
+Scale shape per epoch: one scan of the batch (steps 1-3 are one projection,
+not a filtered branch per outcome, so each event is read once), one
+broadcast join (config ~5 rows), then ONE shuffle keyed (destination,
+bucket) whose partition-local sort makes last-writer-wins dedup an
+adjacency filter inside the same Arrow pass as text extraction, and
+O(batch)-sized delta file writes written straight from that partitioning —
+per-epoch cost is O(batch), independent of table size (merge-on-read lake
+layer). A fresh warehouse's first epoch adds one metadata-only pre-scan of
+the batch to seed its promoted-key registry.
 """
 
 from __future__ import annotations
@@ -50,11 +56,11 @@ from data_exchange_routing_spark.lake.table import (
 from data_exchange_routing_spark.operators.dedup import fused_local_dedup_extract
 from data_exchange_routing_spark.operators.parse import (
     coalesce_routing_keys,
-    enrich_meta,
+    enriched_meta,
     normalize_meta_keys,
 )
-from data_exchange_routing_spark.operators.routing import annotate_routes, split_routed
-from data_exchange_routing_spark.operators.validate import split_valid
+from data_exchange_routing_spark.operators.routing import DEAD_LETTER_DEST, route_or_dead_letter
+from data_exchange_routing_spark.operators.validate import ERROR_COL, with_validation_error
 from data_exchange_routing_spark.schemas import (
     DEAD_LETTER,
     LINEAGE_METRICS,
@@ -526,6 +532,44 @@ def detect_promotable_meta_keys(df: DataFrame) -> list[str]:
     return sorted(k for k in keys if k not in STANDARD_META_KEYS)
 
 
+def project_events(events: DataFrame, route_config: DataFrame) -> DataFrame:
+    """Normalize, validate, enrich and route a batch in ONE projection over
+    one scan: every row comes out with its destination, or with
+    ``destination_table='dead_letter'`` plus its ``error`` and ``stage``
+    (see ``routing.route_or_dead_letter``). Enrichment happens after
+    validation and only on valid rows (the reference validates raw metadata
+    before enriching: RouteIngestedFile.kt:111-146 vs :196-209)."""
+    batch = coalesce_routing_keys(normalize_meta_keys(events))
+    flagged = with_validation_error(batch).withColumn(
+        "meta",
+        F.when(F.col(ERROR_COL).isNull(), enriched_meta(__version__)).otherwise(F.col("meta")),
+    )
+    return route_or_dead_letter(flagged, route_config)
+
+
+def _staged_columns(promote: list[str]) -> list:
+    """The staged write's columns over ``project_events`` output. Live rows
+    carry the delta columns; dead rows carry only url, warc_ts, meta and
+    their dead-letter lsn/error/stage, the other columns null."""
+    live = F.col("error").isNull()
+    return [
+        F.col(DEST_COL),
+        F.col("url"),
+        F.col("warc_ts"),
+        F.when(live, F.col("html")).alias("html"),
+        F.when(live, F.col("lang")).alias("lang"),
+        F.when(live, F.col("lsn")).alias(LSN_COL),
+        F.when(live, F.col("op") == "D").alias(DELETED_COL),
+        *[F.when(live, F.col("meta").getItem(k)).alias(k) for k in promote],
+        # meta rides along for the observation + dead-letter rows; the
+        # fused op nulls it for delta rows
+        F.col("meta"),
+        F.when(~live, F.col("lsn").cast("long")).alias("lsn"),
+        F.col("error"),
+        F.col("stage"),
+    ]
+
+
 def _mark_staging_inflight(staging: str) -> None:
     """Exact in-flight signal for ``Warehouse.vacuum_staging``: a sibling
     ``<dir>.inflight`` marker dropped BEFORE any staged byte exists and
@@ -565,16 +609,22 @@ def apply_epoch(
     epoch (crash replay, at-least-once redelivery of the whole batch) is a
     no-op thanks to per-table epoch guards.
 
-    ONE full-batch Spark action per epoch in steady state:
-      1. the fused multicast write: ONE shuffle keyed (destination, bucket)
-         -> partition-local sort -> last-writer-wins dedup per
-         (destination, url) and text extraction in ONE Arrow pass -> staged
-         parquet, with dead-letter rows riding the same write. Promotable
-         meta keys come from the warehouse registry; an Observation on the
-         write verifies them for free, and only an epoch that introduces a
-         never-before-seen key pays a second staging pass (then the registry
-         absorbs it for all later epochs).
-      2. per-table manifest commits run CONCURRENTLY, metadata-only (no
+    ONE full-batch Spark action per epoch in steady state, reading each
+    event once:
+      1. one projection (``project_events``) validates, enriches and routes
+         every row: a routed row gets its destination (one row per valid
+         route), a failing row gets destination 'dead_letter' plus its
+         error and stage.
+      2. the fused multicast write over that projection: ONE shuffle keyed
+         (destination, bucket) -> partition-local sort -> last-writer-wins
+         dedup per (destination, url) and text extraction in ONE Arrow pass
+         -> staged parquet, dead-letter rows included. Promotable meta keys
+         come from the warehouse registry; an Observation on the write
+         verifies them for free, and only an epoch that introduces a
+         never-before-seen key pays a second staging pass (then the
+         registry absorbs it for all later epochs). A fresh warehouse seeds
+         the registry with one metadata-only pre-scan first.
+      3. per-table manifest commits run CONCURRENTLY, metadata-only (no
          Spark job); lineage rows come from parquet footer stats gathered
          during staging (no extra scan).
     """
@@ -593,20 +643,8 @@ def apply_epoch(
     # second pass is ever needed. Vectorized re-scan + predicate pushdown is
     # cheaper than materializing ~GB of deserialized JVM row objects and
     # paying the GC tax — measured 2x on local[32].
-    batch = normalize_meta_keys(events)
-    batch = coalesce_routing_keys(batch)
-    valid, dead_validate = split_valid(batch)
-    # enrichment happens after validation (the reference validates raw
-    # metadata before enriching: RouteIngestedFile.kt:111-146 vs :196-209)
-    valid = enrich_meta(valid, __version__)
-    annotated = annotate_routes(valid, route_config)
-    routed, dead_route = split_routed(annotated)
-
-    dead_all = (
-        dead_validate.unionAll(dead_route)
-        .withColumn(DEST_COL, F.lit("dead_letter"))
-        .withColumn("lsn", F.col("lsn").cast("long"))
-    )
+    projected = project_events(events, route_config)
+    live = projected.filter(F.col(DEST_COL) != DEAD_LETTER_DEST)
 
     def build_and_stage(promote: list[str], attempt: int):
         """Fused multicast delta: ONE (dest, bucket) exchange +
@@ -617,22 +655,7 @@ def apply_epoch(
         under the pseudo-destination 'dead_letter' and are NOT
         deduplicated — at-least-once dead-lettering, like the reference."""
         obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
-        cols = [
-            F.col(DEST_COL),
-            F.col("url"),
-            F.col("warc_ts"),
-            F.col("html"),
-            F.col("lang"),
-            F.col("lsn").alias(LSN_COL),
-            (F.col("op") == "D").alias(DELETED_COL),
-        ]
-        for k in promote:
-            cols.append(F.col("meta").getItem(k).alias(k))
-        # meta rides along for the observation + dead-letter rows; the
-        # fused op nulls it for delta rows
-        cols.append(F.col("meta"))
-        delta0 = routed.select(*cols)
-        staged_input = delta0.unionByName(dead_all, allowMissingColumns=True)
+        staged_input = projected.select(*_staged_columns(promote))
         # distinct meta keys collected DURING the write — no extra pass.
         # Observed pre-dedup: a superset only when a dropped duplicate
         # carried a key its surviving revision lacks — harmless (extra
@@ -648,7 +671,7 @@ def apply_epoch(
                 F.flatten(
                     F.collect_set(
                         F.when(
-                            F.col(DEST_COL) != "dead_letter",
+                            F.col(DEST_COL) != DEAD_LETTER_DEST,
                             F.map_keys(F.col("meta")),
                         )
                     )
@@ -675,7 +698,7 @@ def apply_epoch(
             # an all-empty batch can optimize the CollectMetrics node away
             # (metrics row then fails Py4J conversion); fall back to the
             # explicit one-job detection — trivially cheap on such batches
-            raw = detect_promotable_meta_keys(batch)
+            raw = detect_promotable_meta_keys(live)
         observed = sorted(k for k in raw if k not in STANDARD_META_KEYS)
         return delta_schema, entries, observed, staging
 
@@ -683,18 +706,18 @@ def apply_epoch(
         promote = wh.known_promote_keys()
     else:
         # Cold registry (fresh warehouse): ONE cheap pre-scan of the
-        # routed batch's meta keys (map_keys + distinct — html is pruned
-        # from the scan, no payload shuffle) seeds the registry up
+        # projection's live rows' meta keys (map_keys + distinct — html is
+        # pruned from the scan, no payload shuffle) seeds the registry up
         # front. Without it the epoch observes every key as
         # never-before-seen and pays the FULL second staging pass
-        # (re-parse + re-shuffle + re-extract of the whole batch). The
-        # scan covers `routed` (post-enrichment/post-routing, where
-        # route-config metadata lands) pre-dedup — the same key set the
-        # staging Observation measures. The registry file is written even
-        # when the seed is empty, so the scan runs only until the first
-        # epoch has written the registry; a genuinely-new key arriving
-        # later still takes the second-pass path below.
-        promote = wh.register_promote_keys(detect_promotable_meta_keys(routed))
+        # (re-parse + re-shuffle + re-extract of the whole batch). The live
+        # rows are post-enrichment/post-routing (where route-config
+        # metadata lands) and pre-dedup — the same key set the staging
+        # Observation measures. The registry file is written even when the
+        # seed is empty, so the scan runs only until the first epoch has
+        # written the registry; a genuinely-new key arriving later still
+        # takes the second-pass path below.
+        promote = wh.register_promote_keys(detect_promotable_meta_keys(live))
     delta_schema, entries_by_dest, observed, staging = build_and_stage(promote, 0)
     new_keys = [k for k in observed if k not in promote]
     if new_keys:
@@ -983,13 +1006,12 @@ def reprocess_dead_letters(
     stats = apply_epoch(wh, events, epoch_id, route_config=route_config)
     if stats.get("skipped"):
         return stats
-    # which of the retried lsns STILL fail under the new config? Recompute
-    # the validity/routing split (metadata-only columns, no text work).
+    # which of the retried lsns STILL fail under the new config? The same
+    # projection the epoch staged (metadata-only columns, no text work).
     cfg = route_config if route_config is not None else default_route_config(wh.spark)
-    batch = coalesce_routing_keys(normalize_meta_keys(events))
-    valid, dead_v = split_valid(batch)
-    routed, dead_r = split_routed(annotate_routes(valid, cfg))
-    still = dead_v.select("lsn").union(dead_r.select("lsn")).distinct()
+    still = (
+        project_events(events, cfg).filter(F.col("error").isNotNull()).select("lsn").distinct()
+    )
     # resolution markers stay DISTRIBUTED end-to-end (VERDICT r03 item 5):
     # the retried-minus-still-failing set is an anti-join appended straight
     # into the error feed — no driver round-trip, so a poison-config epoch
