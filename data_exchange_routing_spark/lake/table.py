@@ -40,7 +40,9 @@ nothing here collects data rows to the driver.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import tempfile
 import time
@@ -267,6 +269,23 @@ def _bounded_str_range(lo: str, hi: str, limit: int = _STR_STATS_MAX) -> list[st
     return [lo, hi]
 
 
+def _stat_key(v, ts: bool):
+    """A predicate bound or a manifest min/max as a comparable value.
+    ``ts_stats`` bounds are ISO strings carrying a UTC offset, so timestamps
+    compare as naive-UTC datetimes (a naive probe is UTC, the session zone):
+    comparing the strings would order "…T03:00:00+00:00" after a probe of
+    "…T03:00:00" and drop the row at exactly that bound. Other bounds
+    compare as recorded (dates as ISO strings)."""
+    if ts:
+        from datetime import datetime, timezone
+
+        v = datetime.fromisoformat(v) if isinstance(v, str) else v
+        if isinstance(v, datetime) and v.tzinfo is not None:
+            v = v.astimezone(timezone.utc).replace(tzinfo=None)
+        return v
+    return v.isoformat() if hasattr(v, "isoformat") else v
+
+
 def _atomic_replace_json(path: str, payload: dict | list) -> None:
     """Durable OVERWRITE publish (contrast _atomic_write_json's exclusive
     create): fsync'd tmp + atomic replace + parent-dir fsync. The ONE
@@ -443,6 +462,97 @@ class LakeTable:
             if not (packed[p // 8] >> (7 - (p % 8)) & 1):
                 return False
         return True
+
+    # ------------------------------------------------ manifest file pruning
+    # A pushed predicate is ("eq", col, value), ("range", col, lo, hi)
+    # (inclusive; None = open end) or ("bucket", buckets). read(),
+    # point_read, delete_eq/delete_range and compact_mor_deletes prune
+    # through _file_may_match and filter rows through _row_filter, so every
+    # reader and rewriter prunes the same way and the pruning can never
+    # disagree with the predicate it guards.
+    @staticmethod
+    def _file_may_match(
+        f: dict, preds: list[tuple], specs: dict | None = None,
+        props: dict | None = None, schema: T.StructType | None = None,
+        key: str | None = None,
+    ) -> bool:
+        """May manifest entry ``f`` hold a row satisfying EVERY predicate?
+
+        Each predicate is tested against whatever evidence the entry carries:
+        partition values (through the transforms of the spec the file was
+        written under, lake/partition.py), ``col_stats`` min/max falling back
+        to ``ts_stats``, ``key_min``/``key_max`` for the merge key, the Bloom
+        bitmap (``eq`` only), and the ``bucket`` field read as a ``[b, b]``
+        range where -1 means any bucket. Conservative: missing evidence, a
+        NULL probe, or a probe not comparable with the evidence keeps the
+        file, so pruning only removes provably-disjoint files."""
+        from data_exchange_routing_spark.lake import partition as _pt
+
+        specs, props = specs or {}, props or {}
+        for p in preds:
+            if p[0] == "bucket":
+                b_lo = b_hi = f.get("bucket", -1)
+                if b_lo != -1 and not any(b_lo <= b <= b_hi for b in p[1]):
+                    return False
+                continue
+            op, col = p[0], p[1]
+            lo, hi = (p[2], p[2]) if op == "eq" else (p[2], p[3])
+            if op == "eq" and lo is None:
+                continue
+            bloom = (f.get("bloom") or {}).get(col)
+            if op == "eq" and bloom is not None and col in props.get("bloom_cols", []):
+                dtype = schema[col].dataType if schema and col in schema.fieldNames() else None
+                probe = _pt.normalize_bound(lo, dtype)
+                if not LakeTable._bloom_probe(bloom, probe, props["bloom_bits"], props["bloom_hashes"]):
+                    return False
+            try:
+                part = ((col, lo), None) if op == "eq" else (None, (col, lo, hi))
+                if not _pt.prune_files([f], specs, *part, schema=schema):
+                    return False
+                # min/max evidence; a column has col_stats or (timestamps)
+                # ts_stats, never both
+                for rng, ts in (
+                    ((f.get("col_stats") or {}).get(col), False),
+                    ((f.get("ts_stats") or {}).get(col), True),
+                    ((f.get("key_min"), f.get("key_max")) if col == key else None, False),
+                ):
+                    if rng is None or None in rng:
+                        continue
+                    fmin, fmax = (_stat_key(x, ts) for x in rng)
+                    if (hi is not None and fmin > _stat_key(hi, ts)) or (
+                        lo is not None and fmax < _stat_key(lo, ts)
+                    ):
+                        return False
+            except (TypeError, ValueError):
+                pass  # probe not comparable with the evidence: keep
+        return True
+
+    def _evidence(self, snap: Snapshot) -> dict:
+        """The table-level context ``_file_may_match`` reads alongside each
+        manifest entry: partition specs, Bloom props, schema and merge key."""
+        return {
+            "specs": self._part_state().get("specs", {}),
+            "props": self._props(),
+            "schema": snap.schema(),
+            "key": snap.key,
+        }
+
+    @staticmethod
+    def _row_filter(preds: list[tuple]):
+        """The exact row predicate of pushed predicates: their conjunction
+        (``bucket`` predicates add none — files are bucket-clustered), or
+        ``lit(True)`` when there is nothing to filter. NULL rows never match
+        an ``eq`` or a bounded ``range``."""
+        conds = []
+        for p in preds:
+            if p[0] == "eq":
+                conds.append(F.col(p[1]) == F.lit(p[2]))
+            elif p[0] == "range":
+                if p[2] is not None:
+                    conds.append(F.col(p[1]) >= F.lit(p[2]))
+                if p[3] is not None:
+                    conds.append(F.col(p[1]) <= F.lit(p[3]))
+        return functools.reduce(operator.and_, conds) if conds else F.lit(True)
 
     # ------------------------------------------------------------ lifecycle
     @classmethod
@@ -892,8 +1002,27 @@ class LakeTable:
         as_of=None,
         with_row_ids: bool = False,
     ) -> DataFrame:
-        """Current resolved state. ``buckets`` prunes files from the manifest
-        before Spark ever lists them (partition pruning).
+        """Current resolved state.
+
+        Pushed predicates: each keyword below becomes one predicate; a file
+        is opened only if ``_file_may_match`` finds that it may hold a row
+        satisfying ALL of them, and ``_row_filter`` then applies their exact
+        conjunction, so pruning only ever removes provably-disjoint files.
+        - ``buckets=[b, ...]`` -> ``bucket``; pruned by each file's
+          ``bucket`` field (-1, an unbucketed file, is always kept). The one
+          predicate keyed tables accept.
+        - ``part_eq=(col, v)`` -> ``eq``; ``part_range=(col, lo, hi)`` ->
+          ``range`` (inclusive, None = open end).
+        - ``bloom_eq=(col, v)`` -> ``eq``; ``col`` must carry a Bloom index
+          and ``v`` must not be NULL (NULLs are never indexed).
+        - ``ts_filter=(col, lo, hi)`` and ``range_filter=(col, lo, hi)`` ->
+          ``range``.
+        Every ``eq``/``range`` is pruned by all the evidence a manifest
+        entry carries: hidden-partition values through the file's own spec,
+        ``col_stats`` min/max (``ts_stats`` for timestamp columns), and, for
+        ``eq``, the Bloom bitmap. Value predicates need an append-only
+        table: value-pruning a keyed table's deltas could drop a key's
+        winning revision.
 
         ``with_row_ids=True`` (append-only tables) adds ``_row_id`` — the
         Iceberg-v3-style row-lineage id, stable across rewrites: implicit
@@ -927,141 +1056,44 @@ class LakeTable:
                 "row lineage is for append-only tables; a keyed table's "
                 "stable row identity is its merge key"
             )
-        files = snap.files
+        has_value_preds = any(
+            p is not None for p in (part_eq, part_range, bloom_eq, ts_filter, range_filter)
+        )
+        if snap.key is not None and has_value_preds:
+            raise ValueError(
+                "part_eq/part_range/bloom_eq/ts_filter/range_filter require "
+                "an append-only (unkeyed) table; keyed tables prune by bucket"
+            )
+        preds: list[tuple] = []
         if buckets is not None:
-            # Unbucketed files (bucket == -1, e.g. legacy driver-side appends)
-            # can hold rows for ANY bucket, so they must survive pruning or a
-            # bucket-selective read / point_read silently misses live rows.
-            keep = set(buckets) | {-1}
-            files = [f for f in files if f["bucket"] in keep]
-        if part_eq is not None or part_range is not None:
-            # hidden-partition pruning (lake/partition.py): predicates are on
-            # SOURCE columns; each file is tested through the transforms of
-            # the spec IT was written under (partition evolution never
-            # rewrites), then the exact row predicate applies — so pruning
-            # can only remove provably-disjoint files. Append-only tables
-            # only, same rationale as ts_filter: value-pruning a keyed
-            # table's deltas could drop a key's winning revision.
-            if snap.key is not None:
-                raise ValueError(
-                    "part_eq/part_range require an append-only (unkeyed) "
-                    "table; keyed tables prune by bucket instead"
-                )
-            from data_exchange_routing_spark.lake import partition as _pt
-
-            specs = self._part_state().get("specs", {})
-            files = _pt.prune_files(files, specs, part_eq, part_range, schema=snap.schema())
-            df = self._read_files(snap, files, with_internal=with_internal, with_row_ids=with_row_ids)
-            if part_eq is not None:
-                df = df.filter(F.col(part_eq[0]) == F.lit(part_eq[1]))
-            if part_range is not None:
-                col, lo, hi = part_range
-                if lo is not None:
-                    df = df.filter(F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(col) <= F.lit(hi))
-            return df
+            preds.append(("bucket", tuple(buckets)))
+        if part_eq is not None:
+            preds.append(("eq", *part_eq))
         if bloom_eq is not None:
-            # point predicate on a NON-key column of an append-only table:
-            # files whose manifest Bloom bitmap says "definitely absent" are
-            # never opened; the exact row predicate still applies afterwards
-            # (no false negatives => result exact). Files lacking a bitmap
-            # (pre-index commits, compaction rewrites) are never pruned.
-            if snap.key is not None:
-                raise ValueError(
-                    "bloom_eq requires an append-only (unkeyed) table; a "
-                    "bloom-pruned current-state read of a keyed table is "
-                    "not well-defined"
-                )
             col, value = bloom_eq
-            props = self._props()
-            if col not in props.get("bloom_cols", []):
+            bloom_cols = self._props().get("bloom_cols", [])
+            if col not in bloom_cols:
                 raise ValueError(
                     f"column {col!r} has no bloom index on this table "
-                    f"(bloom_cols={props.get('bloom_cols', [])})"
+                    f"(bloom_cols={bloom_cols})"
                 )
             if value is None:
                 raise ValueError("bloom_eq cannot probe NULL (never indexed)")
-            bits, hashes = props["bloom_bits"], props["bloom_hashes"]
-            files = [
-                f
-                for f in files
-                if (f.get("bloom") or {}).get(col) is None
-                or self._bloom_probe(f["bloom"][col], value, bits, hashes)
-            ]
-            df = self._read_files(snap, files, with_internal=with_internal, with_row_ids=with_row_ids)
-            return df.filter(F.col(col) == F.lit(value))
-        if ts_filter is not None:
-            # time-scoped scan of an APPEND-ONLY table: (col, lo, hi) prunes
-            # files whose manifest ts_stats range misses [lo, hi] — the
-            # Iceberg column-stats analog — then applies the exact row
-            # predicate (which also reaches the parquet row groups). Keyed
-            # tables refuse: pruning deltas by time would drop the winning
-            # revision of keys last touched outside the window.
-            if snap.key is not None:
-                raise ValueError(
-                    "ts_filter requires an append-only (unkeyed) table; a "
-                    "time-pruned current-state read of a keyed table is not "
-                    "well-defined"
-                )
-            col, lo, hi = ts_filter
-            lo_s = lo.isoformat() if lo is not None else None
-            hi_s = hi.isoformat() if hi is not None else None
-
-            def _overlaps(f: dict) -> bool:
-                rng = (f.get("ts_stats") or {}).get(col)
-                if rng is None:
-                    return True  # no stats recorded: never prune
-                fmin, fmax = rng
-                return (hi_s is None or fmin <= hi_s) and (
-                    lo_s is None or fmax >= lo_s
-                )
-
-            files = [f for f in files if _overlaps(f)]
-            df = self._read_files(snap, files, with_internal=with_internal, with_row_ids=with_row_ids)
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-            return df
-        if range_filter is not None:
-            # value range scan of an APPEND-ONLY table: ts_filter's twin
-            # over col_stats (int/long/float/double/date/string), so measure
-            # AND string predicates prune files from the manifest alone. Same
-            # conservatism: files without recorded stats are never pruned;
-            # NULL rows never match a range predicate, so pruning by value
-            # range cannot lose them.
-            if snap.key is not None:
-                raise ValueError(
-                    "range_filter requires an append-only (unkeyed) table; a "
-                    "value-pruned current-state read of a keyed table is not "
-                    "well-defined"
-                )
-            col, lo, hi = range_filter
-            lo_c = lo.isoformat() if hasattr(lo, "isoformat") else lo
-            hi_c = hi.isoformat() if hasattr(hi, "isoformat") else hi
-
-            def _v_overlaps(f: dict) -> bool:
-                rng = (f.get("col_stats") or {}).get(col)
-                if rng is None:
-                    return True
-                fmin, fmax = rng
-                return (hi_c is None or fmin <= hi_c) and (
-                    lo_c is None or fmax >= lo_c
-                )
-
-            files = [f for f in files if _v_overlaps(f)]
-            df = self._read_files(snap, files, with_internal=with_internal, with_row_ids=with_row_ids)
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-            return df
+            preds.append(("eq", col, value))
+        for rng in (part_range, ts_filter, range_filter):
+            if rng is not None:
+                preds.append(("range", *rng))
+        files = snap.files
+        if preds:
+            ev = self._evidence(snap)
+            files = [f for f in files if self._file_may_match(f, preds, **ev)]
         base_files = [f for f in files if f["kind"] == "base"]
         delta_files = [f for f in files if f["kind"] == "delta"]
         delta_rows = sum(f.get("rows", 0) for f in delta_files)
         if snap.key is None or not delta_files:
             df = self._read_files(snap, files, with_internal=True, with_row_ids=with_row_ids)
+            if has_value_preds:
+                df = df.filter(self._row_filter(preds))
         elif base_files and delta_rows <= self.RESOLVE_BROADCAST_MAX_DELTA_ROWS:
             base = self._read_files(snap, base_files, with_internal=True)
             delta = self._read_files(snap, delta_files, with_internal=True)
@@ -3076,31 +3108,6 @@ class LakeTable:
         }
 
     # --------------------------------------------- append-only row deletes
-    def _file_may_contain(self, f: dict, col: str, value, props: dict, specs: dict, schema: T.StructType | None = None) -> bool:
-        """Metadata-only "can this data file hold a row with col == value?"
-        — hidden-partition transforms (through the file's OWN spec id),
-        manifest min/max column stats, and the Bloom file index, in that
-        order of cost. Shared by the CoW delete pruner (``delete_eq``) and
-        MoR-delete compaction (``compact_mor_deletes``) so the pruning and
-        the predicate they guard can never disagree. Conservative: any
-        missing metadata (or a NULL probe value) answers True."""
-        from data_exchange_routing_spark.lake import partition as _pt
-
-        if value is None:
-            return True
-        if _pt.prune_files([f], specs, (col, value), None,
-                           schema=schema if schema is not None else self.snapshot().schema()) == []:
-            return False
-        iso = value.isoformat() if hasattr(value, "isoformat") else value
-        rng = (f.get("col_stats") or {}).get(col) or (f.get("ts_stats") or {}).get(col)
-        if rng is not None and not (rng[0] <= iso <= rng[1]):
-            return False
-        if col in props.get("bloom_cols", []) and (f.get("bloom") or {}).get(col) is not None:
-            bits, hashes = props["bloom_bits"], props["bloom_hashes"]
-            if not self._bloom_probe(f["bloom"][col], value, bits, hashes):
-                return False
-        return True
-
     def delete_eq(self, col: str, value) -> dict:
         """Delete every row of an append-only table where ``col == value``
         (the GDPR/right-to-erasure workhorse over raw event/page logs).
@@ -3112,16 +3119,8 @@ class LakeTable:
         Bloom file index can prove disjoint stays untouched, metadata-only.
         On a well-partitioned table that is O(matching files), not O(table).
         NULL rows never match an equality predicate and are always kept."""
-        props = self._props()
-        specs = self._part_state().get("specs", {})
-        schema = self.snapshot().schema()
-
-        def may_match(f: dict) -> bool:
-            return self._file_may_contain(f, col, value, props, specs, schema=schema)
-
         return self._delete_rows(
-            F.col(col) == F.lit(value),
-            may_match,
+            [("eq", col, value)],
             {"operation": "delete-eq", "col": col, "value": str(value)},
         )
 
@@ -3129,31 +3128,8 @@ class LakeTable:
         """Delete rows with ``col`` in [lo, hi] (inclusive; None = open end)
         from an append-only table — pruned like ``delete_eq`` via partition
         transforms and manifest stats. NULL rows never match and are kept."""
-        from data_exchange_routing_spark.lake import partition as _pt
-
-        lo_c = lo.isoformat() if hasattr(lo, "isoformat") else lo
-        hi_c = hi.isoformat() if hasattr(hi, "isoformat") else hi
-        specs = self._part_state().get("specs", {})
-        schema = self.snapshot().schema()
-
-        def may_match(f: dict) -> bool:
-            if _pt.prune_files([f], specs, None, (col, lo, hi), schema=schema) == []:
-                return False
-            rng = (f.get("col_stats") or {}).get(col) or (f.get("ts_stats") or {}).get(col)
-            if rng is not None:
-                if hi_c is not None and rng[0] > hi_c:
-                    return False
-                if lo_c is not None and rng[1] < lo_c:
-                    return False
-            return True
-
-        pred = F.lit(True)
-        if lo is not None:
-            pred = pred & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            pred = pred & (F.col(col) <= F.lit(hi))
         return self._delete_rows(
-            pred, may_match, {"operation": "delete-range", "col": col}
+            [("range", col, lo, hi)], {"operation": "delete-range", "col": col}
         )
 
     def delete_matching(self, predicate: str) -> dict:
@@ -3164,9 +3140,8 @@ class LakeTable:
         semantics: only rows where the predicate is TRUE are removed (a NULL
         predicate keeps its row)."""
         return self._delete_rows(
-            F.expr(predicate),
-            lambda f: True,
-            {"operation": "delete-matching", "predicate": predicate},
+            [], {"operation": "delete-matching", "predicate": predicate},
+            pred=F.expr(predicate),
         )
 
     def overwrite_partitions(
@@ -3299,9 +3274,11 @@ class LakeTable:
             "rows_added": sum(f.get("rows", 0) for f in batch_files),
         }
 
-    def _delete_rows(self, pred, may_match, summary: dict) -> dict:
-        """Shared delete machinery: rewrite only may-match files with the
-        negated predicate; untouched files carry over metadata-only. Old
+    def _delete_rows(self, preds: list[tuple], summary: dict, pred=None) -> dict:
+        """Shared delete machinery: rewrite only the files that
+        ``_file_may_match`` keeps for ``preds`` with the negated row
+        predicate (``pred``, default ``_row_filter(preds)``); untouched
+        files carry over metadata-only. Old
         files stay referenced by older snapshots for time travel until
         expire/vacuum, like every rewrite. Concurrent-append safe: aborts on
         version conflict instead of dropping the concurrent batch."""
@@ -3312,8 +3289,12 @@ class LakeTable:
                 "(tombstones); delete_eq/delete_range/delete_matching are "
                 "for append-only tables"
             )
-        keep = [f for f in snap.files if not may_match(f)]
-        rewrite = [f for f in snap.files if may_match(f)]
+        ev = self._evidence(snap)
+        may = [self._file_may_match(f, preds, **ev) for f in snap.files]
+        keep = [f for f, m in zip(snap.files, may) if not m]
+        rewrite = [f for f, m in zip(snap.files, may) if m]
+        if pred is None:
+            pred = self._row_filter(preds)
         new_files: list[dict] = []
         deleted = 0
         if rewrite:
@@ -3534,7 +3515,7 @@ class LakeTable:
         parquet, distinct ``file``); equality deletes prune through the v2
         sequence rule (files with seq >= the delete's seq are exempt) plus
         the same partition-spec / min-max / Bloom metadata the CoW deletes
-        prune with (``_file_may_contain`` — shared code, so pruning and
+        prune with (``_file_may_match`` — shared code, so pruning and
         predicate cannot disagree). Collecting the eq value tuples to the
         driver leans on the same "delete sets are small by construction"
         bound ``_apply_delete_files`` already relies on to broadcast them.
@@ -3563,11 +3544,9 @@ class LakeTable:
                 .distinct()
                 .collect()
             }
-        props = self._props()
-        specs = self._part_state().get("specs", {})
         by_name = {f.name: f for f in snap.schema().fields}
-        schema = snap.schema()
-        eq_sets: list[tuple[list[str], int, list[tuple]]] = []
+        # per eq-delete file: its seq and one predicate list per value tuple
+        eq_sets: list[tuple[int, list[list[tuple]]]] = []
         for d in dels:
             if d["kind"] != "eqdel" or d.get("rows", 0) <= 0:
                 continue
@@ -3580,25 +3559,26 @@ class LakeTable:
                 .distinct()
                 .collect()
             )
-            eq_sets.append((cols, int(d.get("seq", 0)), [tuple(r) for r in vals]))
+            eq_sets.append((
+                int(d.get("seq", 0)),
+                [[("eq", c, v) for c, v in zip(cols, r)] for r in vals],
+            ))
+        ev = self._evidence(snap)
 
         def affected(f: dict) -> bool:
             if f["path"] in pos_victims:
                 return True
             fseq = int(f.get("seq", 0))
-            for cols, dseq, tuples in eq_sets:
-                if fseq >= dseq:
-                    continue
-                for tup in tuples:
-                    if all(
-                        self._file_may_contain(f, c, v, props, specs, schema=schema)
-                        for c, v in zip(cols, tup)
-                    ):
-                        return True
-            return False
+            return any(
+                self._file_may_match(f, preds, **ev)
+                for dseq, pred_sets in eq_sets
+                if fseq < dseq
+                for preds in pred_sets
+            )
 
-        keep = [f for f in snap.files if not affected(f)]
-        rewrite = [f for f in snap.files if affected(f)]
+        hit = [affected(f) for f in snap.files]
+        keep = [f for f, h in zip(snap.files, hit) if not h]
+        rewrite = [f for f, h in zip(snap.files, hit) if h]
         new_files: list[dict] = []
         removed = 0
         if rewrite:
@@ -3852,25 +3832,21 @@ class LakeTable:
             )
             .collect()[0]["b"]
         )
-        # manifest-level file pruning inside the bucket: a file whose
-        # [key_min, key_max] footer range cannot contain the key is skipped
-        # before Spark lists it (files without recorded ranges are kept)
+        # manifest-level file pruning: other buckets' files, and files in
+        # the bucket whose [key_min, key_max] footer range cannot contain the
+        # key, are skipped before Spark lists them
+        key_eq = [("eq", snap.key, key_value)]
+        ev = self._evidence(snap)
         files = [
-            f
-            for f in snap.files
-            if f["bucket"] in (bucket, -1)
-            and (
-                f.get("key_min") is None
-                or f.get("key_max") is None
-                or f["key_min"] <= key_value <= f["key_max"]
-            )
+            f for f in snap.files
+            if self._file_may_match(f, [("bucket", (bucket,)), *key_eq], **ev)
         ]
         df = self._read_files(snap, files, with_internal=True)
         if any(f["kind"] == "delta" for f in files):
             df = self._resolve(df, snap.key)
         df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
         df = df.drop(*[c for c in INTERNAL_COLS if c in df.columns])
-        return df.filter(F.col(snap.key) == key_value)
+        return df.filter(self._row_filter(key_eq))
 
     def bucket_delta_stats(self) -> dict[int, dict]:
         """Per-bucket delta amplification from the manifest alone (no scan):

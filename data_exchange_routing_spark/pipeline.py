@@ -809,11 +809,17 @@ def replay(
     untouched (per-table per-epoch guards + optimistic commit retry); an
     epoch counts as done once its lineage commit, the last of the epoch,
     has landed. Compaction (when requested) runs at quiesce points.
+
+    Only READY segments are applied, by the binlog stream reader's rule
+    (``sources.pyds.ready_epochs``): a root _SUCCESS vouches for every
+    segment, otherwise only the contiguous prefix of _SUCCESS-stamped
+    segments — so a replay over a live WAL never applies (and marks done) a
+    half-copied segment.
     """
     spark = wh.spark
     wh.init_tables()
     start = from_epoch if from_epoch is not None else 0
-    from data_exchange_routing_spark.sources.pyds import truncated_before
+    from data_exchange_routing_spark.sources.pyds import ready_epochs, truncated_before
 
     floor = truncated_before(events_dir)
     # The vouch floor is min(from_epoch, WAL truncation point): a
@@ -835,14 +841,11 @@ def replay(
             "_checkpoints/epoch-*.json and watermark.json are unused and "
             "may be deleted"
         )
-    epochs = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(events_dir)
-        if d.startswith("epoch_hint=")
-    )
+    if not os.path.isdir(events_dir):
+        raise FileNotFoundError(f"no event log at {events_dir}")
     todo = [
         e
-        for e in epochs
+        for e in ready_epochs(events_dir)
         if e not in done
         and (from_epoch is None or e >= from_epoch)
         and (stop_after_epoch is None or e <= stop_after_epoch)

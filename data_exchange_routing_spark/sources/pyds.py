@@ -368,6 +368,30 @@ def _list_epochs(path: str) -> list[int]:
     )
 
 
+def ready_epochs(path: str) -> list[int]:
+    """The WAL segments a consumer may apply, in epoch order — the one
+    readiness rule of both consumers (``pipeline.replay`` and the binlog
+    stream reader). A segment is ready when its own _SUCCESS marker exists
+    (incremental per-segment producer) OR the log root carries one
+    (whole-log batch write — Spark's commit protocol writes root _SUCCESS
+    last, after every task file is renamed into place; the binlog stream
+    WRITER retires the root marker before appending, so a mixed log always
+    gates per segment). CONTIGUOUS PREFIX ONLY: an existing-but-unready
+    segment dir hides every later epoch — without this, a consumer would
+    advance past a mid-commit segment and its rows would be permanently
+    skipped once its marker lands below the consumer's position."""
+    root_ok = os.path.exists(os.path.join(path, "_SUCCESS"))
+    out: list[int] = []
+    for e in _list_epochs(path):
+        if not (
+            root_ok
+            or os.path.exists(os.path.join(path, f"epoch_hint={e}", "_SUCCESS"))
+        ):
+            break
+        out.append(e)
+    return out
+
+
 TRUNCATE_MARKER = "_truncated_before"
 
 
@@ -427,10 +451,10 @@ class _BinlogPartition(InputPartition):
 class _BinlogStreamReader(DataSourceStreamReader):
     """Offsets are {"next_epoch": K}: everything below K is committed.
 
-    The producer contract is the same as pipeline.replay's: a segment dir
-    epoch_hint=K is visible once its _SUCCESS marker exists (Spark's own
-    parquet commit protocol writes it last), so latestOffset never exposes a
-    half-written segment."""
+    The producer contract is pipeline.replay's (``ready_epochs``): a
+    segment dir epoch_hint=K is visible once its _SUCCESS marker exists
+    (Spark's own parquet commit protocol writes it last), so latestOffset
+    never exposes a half-written segment."""
 
     def __init__(self, options: dict, schema):
         path = options.get("path")
@@ -440,32 +464,8 @@ class _BinlogStreamReader(DataSourceStreamReader):
         self.schema = schema
         self.max_epochs = int(options.get("maxepochsperbatch", options.get("maxEpochsPerBatch", 0)) or 0)
 
-    def _ready_epochs(self) -> list[int]:
-        # visibility rule: a segment is ready when its own _SUCCESS marker
-        # exists (incremental per-segment producer) OR the log root carries
-        # one (whole-log batch write — Spark's commit protocol writes root
-        # _SUCCESS last, after every task file is renamed into place; the
-        # binlog stream WRITER retires the root marker before appending, so
-        # a mixed log always gates per segment). CONTIGUOUS PREFIX ONLY: an
-        # existing-but-unready segment dir hides every later epoch — without
-        # this, offsets would advance past a mid-commit segment and its rows
-        # would be permanently skipped once its marker lands below the
-        # committed offset.
-        root_ok = os.path.exists(os.path.join(self.path, "_SUCCESS"))
-        out: list[int] = []
-        for e in _list_epochs(self.path):
-            if not (
-                root_ok
-                or os.path.exists(
-                    os.path.join(self.path, f"epoch_hint={e}", "_SUCCESS")
-                )
-            ):
-                break
-            out.append(e)
-        return out
-
     def initialOffset(self) -> dict:
-        eps = self._ready_epochs()
+        eps = ready_epochs(self.path)
         return {"next_epoch": eps[0] if eps else 0}
 
     def latestOffset(self) -> dict:
@@ -473,7 +473,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
         # (after a full WAL truncation an empty listing must not regress the
         # checkpoint to 0 and grind through bounded empty batches)
         base = max(self._committed or 0, truncated_before(self.path))
-        eps = self._ready_epochs()
+        eps = ready_epochs(self.path)
         if not eps:
             return {"next_epoch": base}
         hi = max(eps[-1] + 1, base)
@@ -492,7 +492,7 @@ class _BinlogStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         parts = []
-        ready = set(self._ready_epochs())
+        ready = set(ready_epochs(self.path))
         for e in range(start["next_epoch"], end["next_epoch"]):
             if e in ready:
                 parts.extend(_BinlogPartition(f, e) for f in _segment_files(self.path, e))
@@ -645,17 +645,13 @@ class BinlogDataSource(DataSource):
         eps = _list_epochs(path)
         if not eps:
             raise FileNotFoundError(f"no epoch_hint=K segments under {path}")
-        root_ok = os.path.exists(os.path.join(path, "_SUCCESS"))
         files: list[str] = []
         # prefer a READY segment (same gate as the reader): a dir mid-commit
         # may transiently hold no parquet files and must not fail the query
-        for e in eps:
-            if root_ok or os.path.exists(
-                os.path.join(path, f"epoch_hint={e}", "_SUCCESS")
-            ):
-                files = _segment_files(path, e)
-                if files:
-                    break
+        for e in ready_epochs(path):
+            files = _segment_files(path, e)
+            if files:
+                break
         if not files:  # fall back to any segment with files (legacy logs)
             for e in eps:
                 files = _segment_files(path, e)

@@ -497,9 +497,9 @@ def test_binlog_sink_retires_root_success_marker(tmp_path):
     root marker, so later half-committed appends can never ride the root
     marker into visibility."""
     from data_exchange_routing_spark.sources.pyds import (
-        _BinlogStreamReader,
         _BinlogStreamWriter,
         _BinlogWriteCommit,
+        ready_epochs,
     )
 
     root = str(tmp_path / "log")
@@ -515,8 +515,7 @@ def test_binlog_sink_retires_root_success_marker(tmp_path):
         f.write(b"y")
     _BinlogStreamWriter({"path": root}, None).commit([_BinlogWriteCommit(nf, 1)], 2)
     assert not os.path.exists(os.path.join(root, "_SUCCESS"))
-    r = _BinlogStreamReader({"path": root}, None)
-    assert r._ready_epochs() == [0, 1, 2]  # all gated per segment now
+    assert ready_epochs(root) == [0, 1, 2]  # all gated per segment now
 
 
 def test_binlog_reader_contiguous_prefix_and_monotone_offsets(tmp_path):
@@ -525,6 +524,7 @@ def test_binlog_reader_contiguous_prefix_and_monotone_offsets(tmp_path):
     even when the listing goes empty (post-truncation)."""
     from data_exchange_routing_spark.sources.pyds import (
         _BinlogStreamReader,
+        ready_epochs,
         truncate_binlog,
     )
 
@@ -536,10 +536,10 @@ def test_binlog_reader_contiguous_prefix_and_monotone_offsets(tmp_path):
         if e != 1:  # epoch 1 mid-commit: no marker yet
             open(os.path.join(root, f"epoch_hint={e}", "_SUCCESS"), "w").close()
     r = _BinlogStreamReader({"path": root}, None)
-    assert r._ready_epochs() == [0]
+    assert ready_epochs(root) == [0]
     assert r.latestOffset() == {"next_epoch": 1}
     open(os.path.join(root, "epoch_hint=1", "_SUCCESS"), "w").close()
-    assert r._ready_epochs() == [0, 1, 2]
+    assert ready_epochs(root) == [0, 1, 2]
     assert r.latestOffset() == {"next_epoch": 3}
     # committed past everything; WAL truncated away entirely
     r.commit({"next_epoch": 3})

@@ -134,6 +134,27 @@ def test_epoch_applied_outside_replay_is_not_restaged(
     assert os.listdir(os.path.join(wh.root, "_checkpoints")) == ["promoted_meta_keys.json"]
 
 
+def test_replay_applies_only_stamped_segments(spark, tmpdir_path):
+    """A live WAL without a root _SUCCESS: a segment that has files but no
+    _SUCCESS of its own is still being copied, so replay must neither apply
+    it nor mark it done, nor apply any segment after it. Once stamped, it and
+    the segments behind it are applied."""
+    log = os.path.join(tmpdir_path, "wal")
+    write_change_events(spark, log, 400, 40, n_epochs=3)
+    os.unlink(os.path.join(log, "_SUCCESS"))
+    for e in (0, 2):
+        open(os.path.join(log, f"epoch_hint={e}", "_SUCCESS"), "w").close()
+    assert any(n.endswith(".parquet") for n in os.listdir(os.path.join(log, "epoch_hint=1")))
+
+    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=4)
+    assert replay(wh, log)["applied_epochs"] == [0]
+    assert wh.completed_epochs() == {0}
+
+    open(os.path.join(log, "epoch_hint=1", "_SUCCESS"), "w").close()
+    res = replay(wh, log)
+    assert res["applied_epochs"] == [1, 2] and res["skipped_epochs"] == [0]
+
+
 def test_resume_from_checkpoint_converges(spark, events_dir, events_pdf, tmpdir_path):
     """Kill after epoch 2, resume — final state identical (T3 replay)."""
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=8)
