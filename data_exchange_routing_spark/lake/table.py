@@ -3059,17 +3059,20 @@ class LakeTable:
                 "tables delete by predicate with delete_where (tombstones)"
             )
         iso = cutoff.isoformat()
+        # compare instants, not ISO strings: bounds carry "+00:00" (or none,
+        # from append_rows) and the cutoff may carry any offset
+        at = _stat_key(cutoff, True)
         drop, keep, straddle = [], [], []
         for f in snap.files:
             rng = (f.get("ts_stats") or {}).get(col)
             has_nulls = col in (f.get("ts_nulls") or [])
             if rng is None:
                 straddle.append(f)
-            elif rng[1] < iso:
+            elif _stat_key(rng[1], True) < at:
                 # a NULL-bearing file can't be metadata-dropped when NULL
                 # rows are being kept: the drop would lose them
                 (straddle if (keep_nulls and has_nulls) else drop).append(f)
-            elif rng[0] >= iso and not (has_nulls and not keep_nulls):
+            elif _stat_key(rng[0], True) >= at and not (has_nulls and not keep_nulls):
                 # wholly inside the window — untouched (unless NULL rows must
                 # be deleted, which needs the exact rewrite)
                 keep.append(f)

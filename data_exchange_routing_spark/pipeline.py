@@ -62,6 +62,7 @@ from data_exchange_routing_spark.operators.parse import (
 from data_exchange_routing_spark.operators.routing import DEAD_LETTER_DEST, route_or_dead_letter
 from data_exchange_routing_spark.operators.validate import ERROR_COL, with_validation_error
 from data_exchange_routing_spark.schemas import (
+    CHANGE_EVENTS,
     DEAD_LETTER,
     LINEAGE_METRICS,
     WEB_PAGES,
@@ -114,8 +115,9 @@ class Warehouse:
     # {w, extra} (contiguous prefix 0..w plus out-of-order ids), so progress
     # stays O(1) bytes at any epoch count. A bootstrapped consumer's vouch
     # floor rides in the same snapshot under the "vouched" guard key, and
-    # the "stream" key marks a warehouse whose guard holds streaming batch
-    # ids (stream_ingest), not WAL segments.
+    # the "stream" key marks a warehouse whose guard holds Structured
+    # Streaming batch ids (stream_ingest(source="files")), not WAL segments.
+    # The binlog tail commits WAL epochs like replay and never sets it.
 
     def _progress(self) -> tuple[dict, int]:
         """(the encoded "lineage" guard, the vouched floor)."""
@@ -147,7 +149,8 @@ class Warehouse:
 
     def mark_stream_fed(self) -> None:
         """Record that the lineage guard holds Structured Streaming batch
-        ids (``stream_ingest``), which are no WAL segment position."""
+        ids (``stream_ingest(source="files")``), which are no WAL segment
+        position."""
         self._mark_progress("stream", 0)
 
     def stream_fed(self) -> bool:
@@ -797,8 +800,10 @@ def replay(
 ) -> dict:
     """Bounded replay of a partitioned event log (binlog-segment dirs
     epoch_hint=K/), resuming from the lineage table's epoch guard (see
-    ``Warehouse.completed_epochs``). The streaming variant
-    (streaming/ingest.py) drives the same apply_epoch via foreachBatch.
+    ``Warehouse.completed_epochs``). The binlog tail,
+    ``stream_ingest(source="binlog")`` (streaming/ingest.py), is this
+    call's incremental mode: it applies the oldest ready epochs past the
+    guard, a bounded number per call, through the same per-epoch path.
     ``from_epoch`` starts the tail at a given segment — the switchover
     position after a snapshot bootstrap (operators/bootstrap.py).
 
@@ -819,7 +824,11 @@ def replay(
     spark = wh.spark
     wh.init_tables()
     start = from_epoch if from_epoch is not None else 0
-    from data_exchange_routing_spark.sources.pyds import ready_epochs, truncated_before
+    from data_exchange_routing_spark.sources.pyds import (
+        ready_epochs,
+        segment_schema,
+        truncated_before,
+    )
 
     floor = truncated_before(events_dir)
     # The vouch floor is min(from_epoch, WAL truncation point): a
@@ -852,7 +861,13 @@ def replay(
     ]
 
     def run_one(e: int) -> int:
-        events = spark.read.parquet(os.path.join(events_dir, f"epoch_hint={e}"))
+        # the schema comes from one footer on the driver: inferring it would
+        # cost a Spark job per epoch. A segment with no parquet file (an
+        # empty producer batch) reads as an empty epoch of the log schema.
+        schema = segment_schema(events_dir, e) or CHANGE_EVENTS
+        events = spark.read.schema(schema).parquet(
+            os.path.join(events_dir, f"epoch_hint={e}")
+        )
         apply_epoch(wh, events, epoch_id=e)
         return e
 
@@ -877,9 +892,10 @@ def applied_watermark(wh: Warehouse) -> int:
     """The contiguous low watermark of replay progress: the smallest epoch
     NOT yet applied (every epoch below it is durably done or vouched). Read
     straight off the encoded lineage guard: its prefix ``w`` plus one,
-    raised to the vouch floor and walked through the out-of-order ids. On a
-    stream-fed warehouse (``Warehouse.stream_fed``) the ids are streaming
-    batch ids, so this is no WAL position there."""
+    raised to the vouch floor and walked through the out-of-order ids. Only
+    on a warehouse fed by the ``files`` stream source
+    (``Warehouse.stream_fed``) are the ids streaming batch ids, so this is
+    no WAL position there; replay and the binlog tail commit WAL epochs."""
     lineage, vouched = wh._progress()
     n = max(lineage.get("w", -1) + 1, vouched)
     extra = set(lineage.get("extra", []))
@@ -897,13 +913,14 @@ def truncate_wal(
     checkpoint's next_epoch, a downstream mirror's cursor) — pass every
     consumer or the lagging one loses data it has not read.
 
-    Stream-fed warehouses: ``stream_ingest`` records Structured Streaming
-    batch ids in the same lineage guard, and a segment can take several
-    batches (``max_files_per_trigger``, no-data watermark batches), so the
-    applied watermark there counts batches and can run ahead of the
-    segments read. The stream's own cursor is the only safe floor: such a
-    warehouse refuses a call without ``extra_consumer_positions`` and
-    ignores its applied watermark."""
+    Stream-fed warehouses (fed by ``stream_ingest(source="files")``; replay
+    and the binlog tail commit WAL epochs): the files stream records
+    Structured Streaming batch ids in the same lineage guard, and a segment
+    can take several batches (``max_files_per_trigger``, no-data watermark
+    batches), so the applied watermark there counts batches and can run
+    ahead of the segments read. The stream's own cursor is the only safe
+    floor: such a warehouse refuses a call without
+    ``extra_consumer_positions`` and ignores its applied watermark."""
     from data_exchange_routing_spark.sources.pyds import truncate_binlog
 
     positions = [int(p) for p in extra_consumer_positions]
@@ -930,8 +947,9 @@ def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
     ``events_dir`` to include the WAL's state (surviving segments, truncation
     floor, this warehouse's applied watermark and its lag behind the log
     head) — the numbers an ops loop alarms on. A stream-fed warehouse's
-    guard counts streaming batches, not segments (see ``truncate_wal``), so
-    there ``applied_watermark`` and ``lag_epochs`` are None: only the
+    guard (``files`` source only; replay and the binlog tail commit WAL
+    epochs) counts streaming batches, not segments (see ``truncate_wal``),
+    so there ``applied_watermark`` and ``lag_epochs`` are None: only the
     stream's cursor knows its position."""
     expected = sorted(set(DESTINATION_TABLES)) + ["dead_letter", "lineage_metrics"]
     out: dict = {"ok": True, "tables": {}}
@@ -1080,8 +1098,8 @@ def maintain(
     ``wal_events_dir`` adds WAL retention to the cycle: event-log segments
     below every consumer's position are garbage-collected (see
     ``truncate_wal``; pass streaming cursors via
-    ``wal_extra_consumer_positions``, without which a stream-fed warehouse
-    refuses).
+    ``wal_extra_consumer_positions``, without which a warehouse fed by the
+    ``files`` stream source refuses).
 
     ``staging_min_age_s`` (default 1 h; ``None`` opts out) runs the
     warehouse staging GC each cycle: unreferenced UNMARKED staging dirs

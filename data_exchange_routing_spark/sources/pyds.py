@@ -17,8 +17,8 @@ edges with catalog-native formats:
   event log (epoch_hint=K/ parquet dirs, the same layout pipeline.replay
   tails) as a REAL Structured Streaming source with offset semantics:
   offsets are {"next_epoch": K}, `latestOffset` advances over fully-written
-  segments only, micro-batch size is bounded by maxEpochsPerBatch
-  (backpressure analog of maxFilesPerTrigger), and partitions() exposes one
+  segments only, maxEpochsPerBatch bounds the later triggers of a
+  continuous query (see `latestOffset`), and partitions() exposes one
   InputPartition per parquet file inside each segment so a micro-batch scan
   parallelizes exactly like the batch path. read() streams pyarrow
   RecordBatches straight off the parquet footers — zero per-row Python.
@@ -442,6 +442,19 @@ def _segment_files(path: str, epoch: int) -> list[str]:
     )
 
 
+def segment_schema(path: str, epoch: int):
+    """The Spark schema of WAL segment ``epoch``, taken on the driver from
+    one parquet footer (no Spark job), or None for a segment holding no
+    parquet file. The file columns exactly as written: the partition column
+    (epoch_hint) is directory metadata and not part of it."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = _segment_files(path, epoch)
+    return from_arrow_schema(pq.read_schema(files[0])) if files else None
+
+
 class _BinlogPartition(InputPartition):
     def __init__(self, file: str, epoch: int):
         self.file = file
@@ -469,6 +482,15 @@ class _BinlogStreamReader(DataSourceStreamReader):
         return {"next_epoch": eps[0] if eps else 0}
 
     def latestOffset(self) -> dict:
+        """What maxEpochsPerBatch bounds: only triggers after a commit this
+        reader has seen. Spark 4.1 runs ``PythonMicroBatchStream`` under
+        ``Trigger.AvailableNow`` as ONE batch over everything outstanding
+        (it logs that the trigger is unsupported and falls back), and the
+        first trigger of any (re)started query reads all outstanding
+        segments too; so only the second and later triggers of a
+        continuous (processingTime) query are bounded. The warehouse tail,
+        ``stream_ingest(source="binlog")``, runs no query and bounds every
+        call itself."""
         # monotone: never below the committed offset or the truncation floor
         # (after a full WAL truncation an empty listing must not regress the
         # checkpoint to 0 and grind through bounded empty batches)
@@ -635,35 +657,22 @@ class BinlogDataSource(DataSource):
         return "binlog"
 
     def schema(self):
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         path = self.options.get("path")
         if not path:
             raise ValueError("binlog source requires .load(path)")
         eps = _list_epochs(path)
         if not eps:
             raise FileNotFoundError(f"no epoch_hint=K segments under {path}")
-        files: list[str] = []
         # prefer a READY segment (same gate as the reader): a dir mid-commit
-        # may transiently hold no parquet files and must not fail the query
-        for e in ready_epochs(path):
-            files = _segment_files(path, e)
-            if files:
-                break
-        if not files:  # fall back to any segment with files (legacy logs)
-            for e in eps:
-                files = _segment_files(path, e)
-                if files:
-                    break
-        if not files:
-            raise FileNotFoundError(
-                f"no committed segment with parquet files under {path}"
-            )
-        # drop the partition column (epoch_hint) — it is directory metadata;
-        # the stream exposes the file columns exactly as written
-        return from_arrow_schema(pq.read_schema(files[0]))
+        # may transiently hold no parquet files and must not fail the query;
+        # then fall back to any segment with files (legacy logs)
+        for e in ready_epochs(path) + eps:
+            schema = segment_schema(path, e)
+            if schema is not None:
+                return schema
+        raise FileNotFoundError(
+            f"no committed segment with parquet files under {path}"
+        )
 
     def streamReader(self, schema) -> _BinlogStreamReader:
         return _BinlogStreamReader(self.options, schema)

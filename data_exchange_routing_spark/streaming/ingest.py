@@ -1,31 +1,38 @@
-"""Structured Streaming ingest: the binlog/WAL tail as a streaming source
-(SURVEY.md §2.1 S1-S3, §2.9 T1-T8).
+"""Ingest of the binlog-segment event log (epoch_hint=K/ segments) into a
+warehouse (SURVEY.md §2.1 S1-S3, §2.9 T1-T8). Both sources of
+``stream_ingest`` feed the SAME apply_epoch as bounded replay.
 
-The reference consumes change events from a storage queue at-least-once
-(RouteIngestedFile.kt:74-103); here the tail is a file-arrival streaming
-source over the partitioned event log (a Kafka source drops in with
-`.format("kafka")` + from_json — same downstream pipeline), and every
-micro-batch flows through the SAME apply_epoch as bounded replay:
+- ``source="binlog"``: the WAL tail as replay's incremental mode. The
+  reference consumes its queue at-least-once and makes each message
+  idempotent at the sink (RouteIngestedFile.kt:74-103); here each call
+  applies the ready segments (``sources.pyds.ready_epochs``) past the
+  lineage guard through replay's per-epoch path, under their WAL epoch ids.
+  No streaming query runs, so the segment is read by the JVM's vectorized
+  parquet reader with no Python worker in between. Exactly-once is the
+  lineage guard: an epoch is done once its lineage commit, the last of the
+  epoch, has landed, so a crashed call's epoch is re-applied by the next
+  call and the per-table guards turn its landed commits into no-ops
+  (T1/T2). The guard is also the resume cursor (T3); ``max_epochs_per_batch``
+  bounds each call (T7 analog of the reference's 50 MiB strategy switch).
+- ``source="files"``: Spark's file-arrival stream (``maxFilesPerTrigger``)
+  applies each micro-batch via foreachBatch under its batch id, resuming
+  from ``checkpointLocation``. ``LineageListener`` bridges its progress
+  (K4/K5 analog).
 
-- exactly-once: Structured Streaming's offset WAL names each micro-batch with
-  a monotonically increasing batch_id; apply_epoch commits are per-table
-  epoch-guarded, so a crash between the sink commit and the streaming commit
-  log replays the batch as a no-op (T1/T2).
-- checkpoint/resume: `checkpointLocation` persists source offsets; restart
-  resumes from the last committed batch (T3).
-- backpressure: `maxFilesPerTrigger` bounds batch size (T7 analog of the
-  reference's 50 MiB big-blob strategy switch).
-- lineage: apply_epoch's lineage table plus a StreamingQueryListener bridge
-  for engine-level progress metrics (K4/K5 analog).
+Batch ids are no WAL positions, so the two id spaces never mix in one
+warehouse: each source refuses a warehouse whose guard holds the other's.
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
-from data_exchange_routing_spark.pipeline import Warehouse, apply_epoch
+from data_exchange_routing_spark.pipeline import Warehouse, apply_epoch, replay
 from data_exchange_routing_spark.schemas import CHANGE_EVENTS
+from data_exchange_routing_spark.sources.pyds import ready_epochs
 
 
 class LineageListener(StreamingQueryListener):
@@ -56,6 +63,25 @@ class LineageListener(StreamingQueryListener):
         pass
 
 
+class AppliedTail:
+    """What ``stream_ingest(source="binlog")`` returns: the call has already
+    applied its epochs, so this handle is finished. It has the members
+    callers of a ``StreamingQuery`` use, plus ``applied_epochs``."""
+
+    def __init__(self, applied_epochs: list[int]):
+        self.runId = uuid.uuid4()
+        self.applied_epochs = applied_epochs
+
+    def awaitTermination(self, timeout: float | None = None) -> bool:
+        return True
+
+    def stop(self) -> None:
+        pass
+
+    def exception(self) -> None:
+        return None
+
+
 def stream_ingest(
     spark: SparkSession,
     events_dir: str,
@@ -65,70 +91,89 @@ def stream_ingest(
     suppress_redelivery_watermark: str | None = None,
     source: str = "files",
     max_epochs_per_batch: int | None = None,
-) -> StreamingQuery:
-    """Start an availableNow streaming ingest of the event log into the
-    warehouse. Returns the running query; callers awaitTermination().
+) -> StreamingQuery | AppliedTail:
+    """Ingest the event log's outstanding segments into the warehouse.
 
-    ``source`` picks the tail implementation over the same segment layout:
-    "files" = Spark's file-arrival source (offsets = seen files);
-    "binlog" = the registered Python Data Source (sources/pyds.py) with
-    epoch-granular offsets and _SUCCESS-gated segment visibility — the
-    WAL-tail-as-source form the north rule describes. Both feed the SAME
-    apply_epoch; final state is contract-equal (tests/test_pyds.py).
+    ``source="binlog"``: the WAL tail (module docstring). Applies the ready
+    segments past the lineage guard, oldest first, at most
+    ``max_epochs_per_batch`` of them (all when None), each under its own
+    WAL epoch id, and returns a finished ``AppliedTail``. An epoch that
+    fails raises from the call, as in ``replay``. ``checkpoint_dir`` is
+    unused. The warehouse stays a replay warehouse: ``replay`` of it applies
+    nothing new, and ``truncate_wal``/``warehouse_health`` need no cursor.
 
-    ``suppress_redelivery_watermark`` (e.g. "2 hours") inserts Spark's
-    built-in ``dropDuplicatesWithinWatermark(["lsn"])`` before the apply:
+    ``source="files"``: starts an availableNow file-arrival stream and
+    returns the running query; callers awaitTermination(). Batch ids land in
+    the lineage guard, and one segment can take several batches
+    (``max_files_per_trigger``, no-data watermark batches), so the warehouse
+    is marked stream-fed (``Warehouse.mark_stream_fed``): ``truncate_wal``
+    then needs this stream's cursor (its ``next_epoch`` offset), the only
+    safe WAL floor, and ``warehouse_health`` reports no watermark.
+
+    ``suppress_redelivery_watermark`` (e.g. "2 hours", files only) inserts
+    Spark's ``dropDuplicatesWithinWatermark(["lsn"])`` before the apply:
     at-least-once sources redeliver the SAME event (same lsn), and dropping
-    those cross-batch saves the downstream merge work. State is GC'd by the
-    watermark; a redelivery beyond it just falls through to the idempotent
-    MERGE, which absorbs it (T1/T2). Per-(warc_ts,lsn) LAST-WRITER dedup of
-    distinct events still happens inside apply_epoch — the built-in keeps
-    the first arrival, which for identical payloads is the same row.
-
-    Each batch id lands in the warehouse's lineage guard like a replay
-    epoch id, so ``applied_watermark(wh)`` counts batches here, and one
-    segment can take several batches (``max_files_per_trigger``, no-data
-    watermark batches). The warehouse is marked stream-fed
-    (``Warehouse.mark_stream_fed``): ``truncate_wal`` then refuses to run
-    without this stream's cursor (its ``next_epoch`` offset), the only safe
-    WAL floor, and ``warehouse_health`` reports no watermark."""
-    wh.init_tables()
-    wh.mark_stream_fed()
+    those cross-batch saves merge work. A redelivery beyond the watermark
+    falls through to the idempotent MERGE (T1/T2); per-(warc_ts, lsn)
+    last-writer dedup still happens inside apply_epoch."""
+    # loud, not silent: each source paces in its own unit, and a dropped
+    # knob would apply the whole outstanding log on a caller that asked for
+    # bounded work
     if source == "binlog":
-        from data_exchange_routing_spark.sources.pyds import register_sources
-
         if max_files_per_trigger is not None:
-            # loud, not silent: the binlog source paces in EPOCHS, and a
-            # dropped backpressure knob would read the whole outstanding WAL
-            # in one batch on a caller that asked for bounded triggers
             raise ValueError(
                 "max_files_per_trigger applies to source='files'; use "
                 "max_epochs_per_batch with source='binlog'"
             )
-        register_sources(spark)
-        reader = spark.readStream.format("binlog")
-        if max_epochs_per_batch is not None:
-            reader = reader.option("maxEpochsPerBatch", max_epochs_per_batch)
-        events = reader.load(events_dir)
-    else:
-        if max_epochs_per_batch is not None:
+        if suppress_redelivery_watermark is not None:
             raise ValueError(
-                "max_epochs_per_batch applies to source='binlog'; use "
-                "max_files_per_trigger with source='files'"
+                "suppress_redelivery_watermark applies to source='files'; "
+                "the binlog tail applies whole segments, and the epoch guard "
+                "absorbs a redelivered one"
             )
-        reader = spark.readStream.schema(CHANGE_EVENTS)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        events = reader.parquet(events_dir)
+        if max_epochs_per_batch is not None and max_epochs_per_batch < 1:
+            raise ValueError("max_epochs_per_batch must be at least 1")
+        wh.init_tables()
+        if wh.stream_fed():
+            raise ValueError(
+                "this warehouse is stream-fed: its lineage guard holds "
+                "streaming batch ids from stream_ingest(source='files'), which "
+                "would make the binlog tail skip real WAL epochs. Re-bootstrap "
+                "it (operators/bootstrap.py), or replay(from_epoch=<the "
+                "stream's next_epoch>)"
+            )
+        done = wh.completed_epochs()
+        todo = [e for e in ready_epochs(events_dir) if e not in done]
+        todo = todo[:max_epochs_per_batch]
+        # replay applies exactly ``todo``: the ready epochs not yet done, up
+        # to the last one this call takes
+        out = replay(wh, events_dir, stop_after_epoch=todo[-1] if todo else -1)
+        return AppliedTail(out["applied_epochs"])
+    if max_epochs_per_batch is not None:
+        raise ValueError(
+            "max_epochs_per_batch applies to source='binlog'; use "
+            "max_files_per_trigger with source='files'"
+        )
+    wh.init_tables()
+    if not wh.stream_fed() and wh.completed_epochs():
+        raise ValueError(
+            "this warehouse's lineage guard holds WAL epochs (fed by replay "
+            "or stream_ingest(source='binlog')); a files stream's batch ids "
+            "would collide with them and be skipped. Keep feeding it with "
+            "replay or the binlog tail, or start the stream on a fresh "
+            "warehouse"
+        )
+    wh.mark_stream_fed()
+    reader = spark.readStream.schema(CHANGE_EVENTS)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    events = reader.parquet(events_dir)
     if suppress_redelivery_watermark is not None:
         events = events.withWatermark(
             "warc_ts", suppress_redelivery_watermark
         ).dropDuplicatesWithinWatermark(["lsn"])
 
     def process(batch_df, batch_id: int) -> None:
-        # streaming batch ids and replay epoch ids share the guard namespace
-        # "cdc"/"dead_letter"/"lineage" only within one driver mode; a
-        # streaming checkpoint owns its warehouse.
         apply_epoch(wh, batch_df, epoch_id=int(batch_id))
 
     return (

@@ -171,13 +171,13 @@ def test_binlog_success_gating_hides_inflight_segment(spark, tmp_path):
     assert got == list(range(30))  # epoch 1 invisible until marked
 
 
-def test_binlog_sourced_stream_ingest_matches_batch_replay(spark, tmp_path):
-    """The WAL-tail-as-source form: stream_ingest(source='binlog') drives the
-    full pipeline (validate -> route -> dedup -> extract -> merge commit)
-    from the Python Data Source and converges to the same final table state
-    as bounded batch replay of the same log."""
-    from data_exchange_routing_spark.pipeline import Warehouse, replay
-    from data_exchange_routing_spark.streaming.ingest import stream_ingest
+def test_binlog_source_foreach_batch_matches_batch_replay(spark, tmp_path):
+    """The WAL-tail-as-source form: spark.readStream.format('binlog') with
+    foreachBatch(apply_epoch) drives the full pipeline (validate -> route ->
+    dedup -> extract -> merge commit) from the Python Data Source and
+    converges to the same final table state as bounded batch replay of the
+    same log."""
+    from data_exchange_routing_spark.pipeline import Warehouse, apply_epoch, replay
 
     from data_exchange_routing_spark.sources.datagen import write_change_events
 
@@ -188,10 +188,15 @@ def test_binlog_sourced_stream_ingest_matches_batch_replay(spark, tmp_path):
     replay(wh_b, ev)
 
     wh_s = Warehouse(spark, str(tmp_path / "wh_stream"), n_buckets=8)
-    q = stream_ingest(
-        spark, ev, wh_s, str(tmp_path / "ckpt"), source="binlog"
+    wh_s.init_tables()
+    q = (
+        spark.readStream.format("binlog").load(ev)
+        .writeStream.foreachBatch(lambda df, bid: apply_epoch(wh_s, df, epoch_id=int(bid)))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
     )
     q.awaitTermination(300)
+    assert q.exception() is None
 
     def state(wh):
         df = wh.table("web_pages").read(with_internal=True)
@@ -641,3 +646,15 @@ def test_stream_ingest_backpressure_knobs_are_loud(spark, tmp_path):
     with pytest.raises(ValueError, match="max_files_per_trigger"):
         stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck2"),
                       max_epochs_per_batch=2, source="files")
+
+
+def test_binlog_tail_refuses_the_redelivery_watermark(spark, tmp_path):
+    """The binlog tail applies whole segments and runs no stream to put a
+    watermark on: the files-only knob raises instead of being ignored."""
+    from data_exchange_routing_spark.pipeline import Warehouse
+    from data_exchange_routing_spark.streaming.ingest import stream_ingest
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
+    with pytest.raises(ValueError, match="suppress_redelivery_watermark"):
+        stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck"),
+                      suppress_redelivery_watermark="1 hour", source="binlog")

@@ -154,3 +154,42 @@ def test_expire_never_metadata_drops_null_bearing_files(spark, tmp_path):
     res2 = t2.expire_data("ts", datetime(2024, 6, 1))
     assert res2["files_dropped"] == 1 and res2["files_rewritten"] == 0
     assert [r["event_id"] for r in t2.read().collect()] == [2]
+
+
+def test_expire_compares_instants_not_iso_strings(spark, tmp_path):
+    """The drop/keep test compares instants: a cutoff of 04:00+01:00 is
+    03:00 UTC, so a file of rows at 03:10 and 03:30 UTC lies wholly inside
+    the window, though its max's ISO string sorts below the cutoff's."""
+    from datetime import timedelta, timezone
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), SCHEMA)
+    t.append(
+        spark.createDataFrame(
+            [(1, datetime(2024, 1, 1, 3, 10), 1), (2, datetime(2024, 1, 1, 3, 30), 2)], SCHEMA
+        ),
+        epoch_id=0,
+    )
+    cutoff = datetime(2024, 1, 1, 4, tzinfo=timezone(timedelta(hours=1)))
+    res = t.expire_data("ts", cutoff)
+    assert res["files_dropped"] == 0 and res["files_kept"] == 1
+    assert sorted(r["event_id"] for r in t.read().collect()) == [1, 2]
+
+
+def test_expire_boundaries_at_the_cutoff(spark, tmp_path):
+    """A file whose max is the cutoff minus 1 us is dropped, one whose min
+    equals the cutoff is kept; both for footer stats (append, "+00:00"
+    strings) and driver-written ones (append_rows, naive strings)."""
+    from datetime import timedelta
+
+    cutoff = datetime(2024, 1, 2, 12)
+    just_before = cutoff - timedelta(microseconds=1)
+    for writer in ("append", "append_rows"):
+        t = LakeTable.create(spark, str(tmp_path / writer), SCHEMA)
+        for k, ts in enumerate([just_before, cutoff]):
+            if writer == "append":
+                t.append(spark.createDataFrame([(k, ts, k)], SCHEMA), epoch_id=k)
+            else:
+                t.append_rows([(k, ts, k)], SCHEMA, epoch_id=k)
+        res = t.expire_data("ts", cutoff)
+        assert (res["files_dropped"], res["files_rewritten"], res["files_kept"]) == (1, 0, 1), writer
+        assert [r["event_id"] for r in t.read().collect()] == [1], writer

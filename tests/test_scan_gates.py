@@ -1,10 +1,11 @@
 """Scan gates for the epoch plan: every change event is read once per epoch.
 
 Like tests/test_plan_audit.py these assert record counts, not times, so host
-noise cannot move them: the rows the streaming source hands to an epoch, and
-the input records and Spark jobs of one ``apply_epoch``. A plan that reads
-the batch once per outcome branch (routed / validate dead letters / route
-dead letters) reads every event three times and fails both gates.
+noise cannot move them: the input records the binlog tail reads for a
+segment, the input records and Spark jobs of one ``apply_epoch``, and the
+jobs of one replayed epoch. A plan that reads the batch once per outcome
+branch (routed / validate dead letters / route dead letters) reads every
+event three times and fails both record gates.
 
 The job count is pinned under the test session's fixed parallelism
 (cores=8, shuffle_partitions=8, tests/conftest.py).
@@ -63,9 +64,27 @@ def test_apply_epoch_reads_each_event_once(spark, tmp_path, log):
     assert len(jobs) == EPOCH_JOBS, [j["name"] for j in jobs]
 
 
+def test_replay_epoch_runs_only_the_apply_epoch_jobs(spark, tmp_path, log):
+    """replay reads each segment with a schema taken from one footer on the
+    driver: an epoch runs the apply_epoch jobs and no schema-inference job."""
+    from data_exchange_routing_spark.pipeline import replay
+
+    _skip_without_ui(spark)
+    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=8)
+    replay(wh, log, stop_after_epoch=0)  # seeds the promoted-key registry
+    assert wh.has_promote_registry()
+    jobs, _ = fetch_jobs_and_stages(spark.sparkContext)
+    job0 = max((j["jobId"] for j in jobs), default=-1)
+    assert replay(wh, log)["applied_epochs"] == [1]
+    jobs, _ = fetch_jobs_and_stages(spark.sparkContext)
+    jobs = [j for j in jobs if j["jobId"] > job0]
+    assert len(jobs) == EPOCH_JOBS, [j["name"] for j in jobs]
+
+
 def test_binlog_tail_hands_each_event_to_the_epoch_once(spark, tmp_path, log):
     from data_exchange_routing_spark.streaming.ingest import stream_ingest
 
+    _skip_without_ui(spark)
     wal = str(tmp_path / "wal")
     wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=8)
     ckpt = str(tmp_path / "ckpt")
@@ -79,10 +98,12 @@ def test_binlog_tail_hands_each_event_to_the_epoch_once(spark, tmp_path, log):
         q = stream_ingest(spark, wal, wh, ckpt, source="binlog", max_epochs_per_batch=1)
         assert q.awaitTermination(180)
         assert q.exception() is None
-        return q
 
     drain(0)  # cold warehouse: seeds the promoted-key registry
-    q = drain(1)
     n_segment = spark.read.parquet(os.path.join(log, "epoch_hint=1")).count()
-    read = sum(p.numInputRows for p in q.recentProgress)
+    _, stages = fetch_jobs_and_stages(spark.sparkContext)
+    stage0 = max(stages, default=-1)
+    drain(1)
+    _, stages = fetch_jobs_and_stages(spark.sparkContext)
+    read = sum(st["inputRecords"] for sid, st in stages.items() if sid > stage0)
     assert read == n_segment, f"source read {read} rows for a {n_segment}-row segment"
