@@ -114,14 +114,23 @@ class Warehouse:
     # when N is in that snapshot's "lineage" guard. The guard is stored as
     # {w, extra} (contiguous prefix 0..w plus out-of-order ids), so progress
     # stays O(1) bytes at any epoch count. A bootstrapped consumer's vouch
-    # floor rides in the same snapshot under the "vouched" guard key, and
-    # the "stream" key marks a warehouse whose guard holds Structured
-    # Streaming batch ids (stream_ingest(source="files")), not WAL segments.
-    # The binlog tail commits WAL epochs like replay and never sets it.
+    # floor rides in the same snapshot under the "vouched" guard key. Replay
+    # and the binlog tail both commit WAL epoch ids, so the guard has one
+    # meaning on every warehouse.
 
     def _progress(self) -> tuple[dict, int]:
-        """(the encoded "lineage" guard, the vouched floor)."""
+        """(the encoded "lineage" guard, the vouched floor). Refuses a
+        warehouse whose guard holds Structured Streaming batch ids (the
+        "stream" key, set by the retired files stream source): read as WAL
+        epochs they would skip real segments."""
         guards = self.table("lineage_metrics").snapshot().committed_epochs
+        if "stream" in guards:
+            raise ValueError(
+                "this warehouse was fed by the retired files stream source: "
+                "its lineage guard holds streaming batch ids, not WAL epochs. "
+                "Re-bootstrap it into a fresh warehouse "
+                "(operators/bootstrap.py) and tail the WAL from there"
+            )
         lineage = guards.get("lineage", [])
         if not isinstance(lineage, dict):
             lineage = _enc_epochs(set(lineage))
@@ -143,27 +152,14 @@ class Warehouse:
         applying here (replay derives it as min(from_epoch,
         truncated_before(events_dir))). A metadata-only commit to
         lineage_metrics under the monotonic "vouched" guard, made only when
-        the floor rises: a steady-state call writes nothing."""
-        if floor > 0:
-            self._mark_progress("vouched", floor - 1)
-
-    def mark_stream_fed(self) -> None:
-        """Record that the lineage guard holds Structured Streaming batch
-        ids (``stream_ingest(source="files")``), which are no WAL segment
-        position."""
-        self._mark_progress("stream", 0)
-
-    def stream_fed(self) -> bool:
-        snap = self.table("lineage_metrics").snapshot()
-        return "stream" in snap.committed_epochs
-
-    def _mark_progress(self, key: str, epoch_id: int) -> None:
-        t = self.table("lineage_metrics")
-        snap = t.snapshot()
-        if not snap.epoch_committed(key, epoch_id):
+        the floor rises: a steady-state call writes nothing. The floor is
+        read through ``_progress``, so a warehouse it refuses gets no
+        commit."""
+        if floor > 0 and floor > self.checkpoint_vouched_floor():
+            t = self.table("lineage_metrics")
             t.commit_staged_files(
-                [], snap.schema(), epoch_id=epoch_id, source=key,
-                summary={"operation": key}, epoch_monotonic=True,
+                [], t.snapshot().schema(), epoch_id=floor - 1, source="vouched",
+                summary={"operation": "vouched"}, epoch_monotonic=True,
             )
 
     # ---- cross-table snapshot isolation (warehouse-level consistent cuts) --
@@ -892,10 +888,7 @@ def applied_watermark(wh: Warehouse) -> int:
     """The contiguous low watermark of replay progress: the smallest epoch
     NOT yet applied (every epoch below it is durably done or vouched). Read
     straight off the encoded lineage guard: its prefix ``w`` plus one,
-    raised to the vouch floor and walked through the out-of-order ids. Only
-    on a warehouse fed by the ``files`` stream source
-    (``Warehouse.stream_fed``) are the ids streaming batch ids, so this is
-    no WAL position there; replay and the binlog tail commit WAL epochs."""
+    raised to the vouch floor and walked through the out-of-order ids."""
     lineage, vouched = wh._progress()
     n = max(lineage.get("w", -1) + 1, vouched)
     extra = set(lineage.get("extra", []))
@@ -909,31 +902,13 @@ def truncate_wal(
 ) -> dict:
     """WAL retention for the replay's event log: remove every segment all
     consumers have passed. The floor is the min of this warehouse's applied
-    watermark and any ``extra_consumer_positions`` (e.g. a streaming
-    checkpoint's next_epoch, a downstream mirror's cursor) — pass every
-    consumer or the lagging one loses data it has not read.
-
-    Stream-fed warehouses (fed by ``stream_ingest(source="files")``; replay
-    and the binlog tail commit WAL epochs): the files stream records
-    Structured Streaming batch ids in the same lineage guard, and a segment
-    can take several batches (``max_files_per_trigger``, no-data watermark
-    batches), so the applied watermark there counts batches and can run
-    ahead of the segments read. The stream's own cursor is the only safe
-    floor: such a warehouse refuses a call without
-    ``extra_consumer_positions`` and ignores its applied watermark."""
+    watermark and any ``extra_consumer_positions`` (e.g. a binlog
+    ``readStream`` checkpoint's next_epoch, a downstream mirror's cursor) —
+    pass every consumer or the lagging one loses data it has not read."""
     from data_exchange_routing_spark.sources.pyds import truncate_binlog
 
     positions = [int(p) for p in extra_consumer_positions]
-    if wh.stream_fed():
-        if not positions:
-            raise ValueError(
-                "stream-fed warehouse: its lineage guard counts streaming "
-                "batches, not WAL segments; pass the stream's cursor (its "
-                "next_epoch offset) in extra_consumer_positions"
-            )
-    else:
-        positions.append(applied_watermark(wh))
-    return truncate_binlog(events_dir, min(positions))
+    return truncate_binlog(events_dir, min(positions + [applied_watermark(wh)]))
 
 
 def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
@@ -946,11 +921,7 @@ def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
     with ok=False if any expected table is missing/unreadable. Pass
     ``events_dir`` to include the WAL's state (surviving segments, truncation
     floor, this warehouse's applied watermark and its lag behind the log
-    head) — the numbers an ops loop alarms on. A stream-fed warehouse's
-    guard (``files`` source only; replay and the binlog tail commit WAL
-    epochs) counts streaming batches, not segments (see ``truncate_wal``),
-    so there ``applied_watermark`` and ``lag_epochs`` are None: only the
-    stream's cursor knows its position."""
+    head) — the numbers an ops loop alarms on."""
     expected = sorted(set(DESTINATION_TABLES)) + ["dead_letter", "lineage_metrics"]
     out: dict = {"ok": True, "tables": {}}
     for name in expected:
@@ -975,13 +946,13 @@ def warehouse_health(wh: Warehouse, events_dir: str | None = None) -> dict:
                 for d in os.listdir(events_dir)
                 if d.startswith("epoch_hint=")
             )
-            wm = None if wh.stream_fed() else applied_watermark(wh)
+            wm = applied_watermark(wh)
             head = (segs[-1] + 1) if segs else truncated_before(events_dir)
             out["wal"] = {
                 "segments": len(segs),
                 "truncated_before": truncated_before(events_dir),
                 "applied_watermark": wm,
-                "lag_epochs": None if wm is None else max(0, head - wm),
+                "lag_epochs": max(0, head - wm),
             }
         except Exception as e:  # noqa: BLE001
             out["ok"] = False
@@ -1097,9 +1068,8 @@ def maintain(
 
     ``wal_events_dir`` adds WAL retention to the cycle: event-log segments
     below every consumer's position are garbage-collected (see
-    ``truncate_wal``; pass streaming cursors via
-    ``wal_extra_consumer_positions``, without which a warehouse fed by the
-    ``files`` stream source refuses).
+    ``truncate_wal``; pass other consumers' cursors via
+    ``wal_extra_consumer_positions``).
 
     ``staging_min_age_s`` (default 1 h; ``None`` opts out) runs the
     warehouse staging GC each cycle: unreferenced UNMARKED staging dirs
@@ -1165,7 +1135,8 @@ def maintain(
             t.vacuum_orphans()
     if wal_events_dir is not None:
         # WAL GC rides the same ops cycle: drop segments every consumer has
-        # passed (pass every streaming cursor or the laggard loses data)
+        # passed (pass every other consumer's cursor or the laggard loses
+        # data)
         report["wal"] = truncate_wal(
             wh, wal_events_dir, wal_extra_consumer_positions
         )

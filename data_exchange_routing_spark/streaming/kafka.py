@@ -3,8 +3,8 @@
 The reference's Event Hub / Service Bus consumers (FnRouter.kt:29-39,
 fn-internalrouter/Function.kt:26-34) are queue tails carrying JSON envelopes;
 in Spark that is the Kafka source with `from_json`, feeding the SAME
-foreachBatch(apply_epoch) pipeline as the file-based tail
-(streaming/ingest.py).
+per-epoch ``apply_epoch`` that replay and the binlog WAL tail
+(streaming/ingest.py) run, through ``foreachBatch(apply_epoch)``.
 
 WHY ``kafka_tail`` ITSELF IS NEVER EXECUTED IN THIS SANDBOX (the single
 authoritative statement; everything else links here): running it needs
@@ -81,7 +81,8 @@ def parse_kafka_debezium(raw: DataFrame, image: T.StructType) -> DataFrame:
     (operators/debezium.py pins the wire semantics: op c/r/u/d mapping,
     before-image for deletes, base64 binary, int64-micros timestamps).
     Output: (lsn, op, *image columns, _kafka_partition, _kafka_offset) —
-    drop-in for the same foreachBatch(apply_epoch) pipeline."""
+    drop-in for the same ``foreachBatch(apply_epoch)`` query as
+    ``parse_kafka_records``."""
     from data_exchange_routing_spark.operators.debezium import parse_debezium
 
     base = raw.select(

@@ -4,12 +4,12 @@
     zip -qr engine.zip data_exchange_routing_spark
     spark-submit --master <master> --py-files engine.zip \
         scripts/replay_driver.py --events-dir EVENTS --warehouse WH \
-        [--streaming] [--generate N_EVENTS N_URLS N_EPOCHS] [--compact-every K]
+        [--generate N_EVENTS N_URLS N_EPOCHS] [--compact-every K]
 
-Batch mode replays all unapplied epochs from the partitioned event log and
-prints per-table row counts; --streaming drives the same pipeline through a
-Structured Streaming availableNow tail with a durable checkpoint. Re-running
-either mode is a no-op for already-committed epochs (exactly-once guard).
+Replays all unapplied epochs from the partitioned event log and prints
+per-table row counts. Re-running it is a no-op for already-committed epochs
+(exactly-once guard). A live WAL is tailed by the same apply path: call
+``streaming.ingest.stream_ingest`` on a schedule.
 """
 
 from __future__ import annotations
@@ -31,7 +31,6 @@ def main() -> None:
     ap.add_argument("--events-dir", required=True)
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--streaming", action="store_true")
     ap.add_argument("--compact-every", type=int, default=None)
     ap.add_argument(
         "--generate",
@@ -50,20 +49,7 @@ def main() -> None:
         write_change_events(spark, args.events_dir, n_events, n_urls, n_epochs=n_epochs)
 
     wh = Warehouse(spark, args.warehouse, n_buckets=args.n_buckets)
-    if args.streaming:
-        from data_exchange_routing_spark.streaming.ingest import stream_ingest
-
-        q = stream_ingest(
-            spark,
-            args.events_dir,
-            wh,
-            checkpoint_dir=os.path.join(args.warehouse, "_stream_checkpoint"),
-        )
-        q.awaitTermination()
-        result = {"mode": "streaming"}
-    else:
-        result = replay(wh, args.events_dir, compact_every=args.compact_every)
-        result["mode"] = "batch"
+    result = replay(wh, args.events_dir, compact_every=args.compact_every)
 
     counts = {t: wh.table(t).read().count() for t in sorted(set(DESTINATION_TABLES))}
     counts["dead_letter"] = wh.table("dead_letter").read().count()

@@ -3,7 +3,8 @@
 segments past the lineage guard, at most ``max_epochs_per_batch`` of them,
 each under its own WAL epoch id. A tail-fed warehouse is therefore a replay
 warehouse: replay, WAL truncation and the health probe read its guard as WAL
-positions. The files stream's batch ids never mix with WAL epochs."""
+positions. A warehouse whose guard holds Structured Streaming batch ids (the
+"stream" mark of the retired files source) is refused before any write."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ from data_exchange_routing_spark.pipeline import (
     warehouse_health,
 )
 from data_exchange_routing_spark.sources.datagen import write_change_events
+from data_exchange_routing_spark.sources.pyds import truncate_binlog
 from data_exchange_routing_spark.streaming.ingest import stream_ingest
 
 
@@ -50,6 +52,10 @@ def _lineage_epochs(wh) -> set[int]:
     return {r["epoch_id"] for r in wh.table("lineage_metrics").read().select("epoch_id").collect()}
 
 
+def _guards(wh) -> dict:
+    return wh.table("lineage_metrics").snapshot().committed_epochs
+
+
 def _lsns(df, col: str = "lsn") -> set[int]:
     return {r[0] for r in df.select(col).collect()}
 
@@ -68,7 +74,7 @@ def test_bounded_tail_commits_one_wal_epoch_per_call(spark, tmp_path, log):
         assert _lineage_epochs(wh) == set(range(k + 1))
         assert q.applied_epochs == [k]
     assert _tail(spark, wal, wh, tmp_path, bound=1).applied_epochs == []
-    assert not wh.stream_fed()
+    assert "stream" not in _guards(wh)
 
 
 def test_replay_of_a_tail_fed_warehouse_applies_nothing(spark, tmp_path, log):
@@ -103,23 +109,34 @@ def test_truncate_and_health_need_no_cursor_on_a_tail_fed_warehouse(spark, tmp_p
     assert _tail(spark, wal, wh, tmp_path, bound=1).applied_epochs == [2]
 
 
-def test_binlog_tail_refuses_a_stream_fed_warehouse(spark, tmp_path, log):
-    """A files stream's guard holds batch ids; reading them as WAL epochs
-    would skip real segments."""
-    wal = _wal(tmp_path, log, epochs=(0,))
+def test_every_progress_reader_refuses_a_batch_id_guard_before_writing(spark, tmp_path, log):
+    """A warehouse fed by the retired files stream source carries the
+    "stream" mark: its guard holds batch ids, and reading them as WAL epochs
+    would skip real segments. Replay, the tail and truncation refuse it
+    without committing anything or deleting a segment; the health probe
+    reports the error."""
+    wal = _wal(tmp_path, log)
     wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
     wh.init_tables()
-    wh.mark_stream_fed()
-    with pytest.raises(ValueError, match="stream-fed.*replay\\(from_epoch="):
+    lm = wh.table("lineage_metrics")
+    # the mark as the files source committed it
+    lm.commit_staged_files([], lm.snapshot().schema(), epoch_id=0, source="stream", epoch_monotonic=True)
+    version = lm.current_version()
+    segments = sorted(os.listdir(wal))
+    with pytest.raises(ValueError, match="bootstrap"):
+        replay(wh, wal)
+    with pytest.raises(ValueError, match="bootstrap"):
         stream_ingest(spark, wal, wh, str(tmp_path / "ckpt"), source="binlog")
-    assert wh.completed_epochs() == set()
-
-
-def test_files_stream_refuses_a_warehouse_holding_wal_epochs(spark, tmp_path, log):
-    """A files stream after a replay would commit batch ids that collide with
-    the applied epochs, and silently skip those batches."""
-    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
-    replay(wh, log, stop_after_epoch=0)
-    with pytest.raises(ValueError, match="WAL epochs"):
-        stream_ingest(spark, log, wh, str(tmp_path / "ckpt"))
-    assert not wh.stream_fed()
+    with pytest.raises(ValueError, match="bootstrap"):
+        truncate_wal(wh, wal)
+    assert lm.current_version() == version
+    assert sorted(os.listdir(wal)) == segments
+    # past a truncation replay would first vouch for the epochs below the
+    # floor; the refusal comes before that commit too
+    truncate_binlog(wal, 1)
+    with pytest.raises(ValueError, match="bootstrap"):
+        replay(wh, wal, from_epoch=1)
+    assert lm.current_version() == version
+    health = warehouse_health(wh, events_dir=wal)
+    assert health["ok"] is False
+    assert "bootstrap" in health["wal"]["error"]

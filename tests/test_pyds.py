@@ -634,27 +634,14 @@ def test_warc_sink_empty_dataframe_fresh_path(spark, tmp_path):
 
 
 def test_stream_ingest_backpressure_knobs_are_loud(spark, tmp_path):
-    """The files knob on the binlog source (and vice versa) raises instead
-    of silently reading the whole outstanding WAL in one batch."""
+    """The WAL tail has one source and one bound: any other source, and a
+    bound that would apply nothing, raise instead of being ignored."""
     from data_exchange_routing_spark.pipeline import Warehouse
     from data_exchange_routing_spark.streaming.ingest import stream_ingest
 
     wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
+    with pytest.raises(ValueError, match="replay"):
+        stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck"), source="files")
     with pytest.raises(ValueError, match="max_epochs_per_batch"):
-        stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck"),
-                      max_files_per_trigger=10, source="binlog")
-    with pytest.raises(ValueError, match="max_files_per_trigger"):
         stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck2"),
-                      max_epochs_per_batch=2, source="files")
-
-
-def test_binlog_tail_refuses_the_redelivery_watermark(spark, tmp_path):
-    """The binlog tail applies whole segments and runs no stream to put a
-    watermark on: the files-only knob raises instead of being ignored."""
-    from data_exchange_routing_spark.pipeline import Warehouse
-    from data_exchange_routing_spark.streaming.ingest import stream_ingest
-
-    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
-    with pytest.raises(ValueError, match="suppress_redelivery_watermark"):
-        stream_ingest(spark, str(tmp_path / "ev"), wh, str(tmp_path / "ck"),
-                      suppress_redelivery_watermark="1 hour", source="binlog")
+                      source="binlog", max_epochs_per_batch=0)

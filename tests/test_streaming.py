@@ -1,16 +1,15 @@
-"""Structured Streaming ingest: drain-to-parity with the oracle, restart
-safety, and micro-batch lineage."""
+"""The WAL tail (``stream_ingest``): drain-to-parity with the oracle, one
+segment per bounded call, restart safety, and per-epoch lineage."""
 
 from __future__ import annotations
 
 import os
 
-import pandas as pd
 import pytest
 
 from data_exchange_routing_spark.pipeline import Warehouse
 from data_exchange_routing_spark.sources.datagen import write_change_events
-from data_exchange_routing_spark.streaming.ingest import LineageListener, stream_ingest
+from data_exchange_routing_spark.streaming.ingest import stream_ingest
 from tests.oracle import oracle_final_states
 
 
@@ -21,16 +20,20 @@ def stream_events_dir(spark, tmp_path_factory):
     return d
 
 
+def _tail(spark, events_dir, wh, cp):
+    q = stream_ingest(spark, events_dir, wh, cp, source="binlog", max_epochs_per_batch=1)
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    return q.applied_epochs
+
+
 def test_stream_drain_matches_oracle(spark, stream_events_dir, tmpdir_path):
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh"), n_buckets=8)
     cp = os.path.join(tmpdir_path, "cp")
-    listener = LineageListener()
-    spark.streams.addListener(listener)
-    try:
-        q = stream_ingest(spark, stream_events_dir, wh, cp, max_files_per_trigger=40)
-        q.awaitTermination(300)
-    finally:
-        spark.streams.removeListener(listener)
+    # each bounded call applies the next segment (the call after the last
+    # one, below, applies nothing)
+    calls = [_tail(spark, stream_events_dir, wh, cp) for _ in range(4)]
+    assert calls == [[0], [1], [2], [3]]
 
     events_pdf = spark.read.parquet(stream_events_dir).toPandas()
     expected = oracle_final_states(events_pdf)["web_pages"]
@@ -41,36 +44,11 @@ def test_stream_drain_matches_oracle(spark, stream_events_dir, tmpdir_path):
     assert list(g["url"]) == list(e["url"])
     assert list(g["text"]) == list(e["text"])  # byte-identical extraction
 
-    # multiple micro-batches actually happened, and lineage saw them
-    assert len(listener.progress) >= 2
+    # lineage rows carry exactly the applied WAL epochs
     lm = wh.table("lineage_metrics").read().toPandas()
-    assert lm["epoch_id"].nunique() >= 2
+    assert set(lm["epoch_id"]) == {0, 1, 2, 3}
 
-    # restart on the same checkpoint: no new data -> no state change
+    # a re-run has nothing left to apply -> no state change
     v_before = wh.table("web_pages").current_version()
-    q2 = stream_ingest(spark, stream_events_dir, wh, cp, max_files_per_trigger=40)
-    q2.awaitTermination(120)
+    assert _tail(spark, stream_events_dir, wh, cp) == []
     assert wh.table("web_pages").current_version() == v_before
-
-
-def test_redelivery_suppression_same_final_state(spark, stream_events_dir, tmpdir_path):
-    """dropDuplicatesWithinWatermark(['lsn']) before the apply yields exactly
-    the same final table state (the event log contains ~1.5% redeliveries),
-    with less merge work downstream."""
-    plain = Warehouse(spark, os.path.join(tmpdir_path, "wh_plain"), n_buckets=8)
-    q = stream_ingest(spark, stream_events_dir, plain, os.path.join(tmpdir_path, "ck1"))
-    q.awaitTermination(300)
-    sup = Warehouse(spark, os.path.join(tmpdir_path, "wh_sup"), n_buckets=8)
-    q2 = stream_ingest(
-        spark,
-        stream_events_dir,
-        sup,
-        os.path.join(tmpdir_path, "ck2"),
-        suppress_redelivery_watermark="24 hours",
-    )
-    q2.awaitTermination(300)
-    a = plain.table("web_pages").read().select("url", "warc_ts", "text").toPandas()
-    b = sup.table("web_pages").read().select("url", "warc_ts", "text").toPandas()
-    a = a.sort_values("url").reset_index(drop=True)
-    b = b.sort_values("url").reset_index(drop=True)
-    assert a.equals(b) and len(a) > 0

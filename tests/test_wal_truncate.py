@@ -125,30 +125,3 @@ def test_maintain_cycle_truncates_wal(spark, tmpdir_path, replayed):
     assert rep["wal"]["removed_epochs"] == [0, 1, 2, 3]
     assert truncated_before(events) == 4
 
-
-def test_stream_fed_warehouse_needs_the_stream_cursor(spark, tmpdir_path):
-    """A files-source stream takes several batches per segment, so its
-    lineage guard counts batches and runs ahead of the segments read:
-    truncate_wal refuses without the stream's cursor instead of deleting
-    segments, and the health probe reports no watermark."""
-    from data_exchange_routing_spark.pipeline import warehouse_health
-    from data_exchange_routing_spark.streaming.ingest import stream_ingest
-
-    events = f"{tmpdir_path}/events"
-    write_change_events(spark, events, 600, 60, n_epochs=2)  # 32 files each
-    wh = Warehouse(spark, f"{tmpdir_path}/wh", n_buckets=4)
-    q = stream_ingest(spark, events, wh, f"{tmpdir_path}/cp", max_files_per_trigger=16)
-    q.awaitTermination(300)
-    assert q.exception() is None
-    assert wh.stream_fed()
-    assert applied_watermark(wh) > 2  # more batches than segments
-    with pytest.raises(ValueError, match="stream-fed"):
-        truncate_wal(wh, events)
-    assert truncated_before(events) == 0
-    assert warehouse_health(wh, events_dir=events)["wal"] == {
-        "segments": 2, "truncated_before": 0,
-        "applied_watermark": None, "lag_epochs": None,
-    }
-    # the stream's cursor alone sets the floor
-    res = truncate_wal(wh, events, extra_consumer_positions=(1,))
-    assert res["removed_epochs"] == [0]
