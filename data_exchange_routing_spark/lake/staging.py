@@ -9,12 +9,17 @@ costs zero extra Spark jobs.
 
 This collapses the reference's per-route copy loop (RouteIngestedFile.kt:193)
 into a single shuffle + single write at any number of routes.
+``promote_map_keys`` then turns open-world metadata keys into columns
+(RouteIngestedFile.kt:196-209), rewriting only the staged files that carry one.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,6 +27,7 @@ from pyspark.sql import functions as F
 from data_exchange_routing_spark.lake.table import BUCKET_COL
 
 DEST_COL = "destination_table"
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def stage_multicast_delta(
@@ -112,10 +118,56 @@ def stage_multicast_delta(
             "key_max": kmax,
         }
 
-    from concurrent.futures import ThreadPoolExecutor
-
     entries: dict[str, list[dict]] = {}
     with ThreadPoolExecutor(max_workers=16) as ex:
         for dest, entry in ex.map(stat_one, work):
             entries.setdefault(dest, []).append(entry)
     return entries
+
+
+def promote_map_keys(entries: list[dict], map_col: str) -> list[str]:
+    """Turn the keys in the staged files' ``map_col`` into nullable string
+    columns, on the driver with pyarrow; returns them sorted. Only the files
+    where ``map_col`` holds a key are rewritten, in place: one column per key
+    found in ANY file takes ``map_col``'s place; codec, row order, column
+    types, rows and ts/key bounds are kept, and the entry's ``bytes`` is
+    updated. Cost: one column read per file plus O(rewritten bytes)."""
+
+    def keys_of(e: dict) -> set[str]:
+        with pq.ParquetFile(e["path"]) as f:
+            col = f.read(columns=[map_col]).column(0)
+        return {k for chunk in col.chunks for k in pc.unique(chunk.keys).to_pylist()}
+
+    def rewrite(e: dict) -> None:
+        path = e["path"]
+        with pq.ParquetFile(path) as f:
+            codec = f.metadata.row_group(0).column(0).compression
+            t = f.read()
+        i = t.schema.get_field_index(map_col)
+        m = t.column(i)
+        t = t.remove_column(i)
+        for j, k in enumerate(keys):
+            t = t.add_column(i + j, pa.field(k, pa.string()), pc.map_lookup(m, k, "first"))
+        # Spark's copy of the schema in the footer still names map_col:
+        # without it Spark infers the schema from the parquet one
+        md = {k: v for k, v in (t.schema.metadata or {}).items() if k != _SPARK_SCHEMA_KEY}
+        tmp = os.path.join(os.path.dirname(path), f".promote-{os.path.basename(path)}")
+        pq.write_table(
+            t.replace_schema_metadata(md), tmp,
+            compression="NONE" if codec == "UNCOMPRESSED" else codec,
+        )
+        # the Hadoop local filesystem verifies a file against its .crc
+        # sibling: the old checksum would fail every read of the new bytes
+        try:
+            os.unlink(os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc"))
+        except FileNotFoundError:
+            pass
+        os.replace(tmp, path)
+        e["bytes"] = os.path.getsize(path)
+
+    # one small column per file: read in turn, faster than through a pool
+    found = [keys_of(e) for e in entries]
+    keys = sorted(set().union(*found))
+    with ThreadPoolExecutor(max_workers=16) as ex:
+        list(ex.map(rewrite, [e for e, ks in zip(entries, found) if ks]))
+    return keys

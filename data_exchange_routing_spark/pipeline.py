@@ -27,8 +27,8 @@ bucket) whose partition-local sort makes last-writer-wins dedup an
 adjacency filter inside the same Arrow pass as text extraction, and
 O(batch)-sized delta file writes written straight from that partitioning —
 per-epoch cost is O(batch), independent of table size (merge-on-read lake
-layer). A fresh warehouse's first epoch adds one metadata-only pre-scan of
-the batch to seed its promoted-key registry.
+layer). Meta keys not yet promoted to columns are promoted after the write,
+on the driver, by rewriting only the staged files that carry them.
 """
 
 from __future__ import annotations
@@ -37,13 +37,14 @@ import json
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_exchange_routing_spark import __version__
-from data_exchange_routing_spark.lake.staging import DEST_COL, stage_multicast_delta
+from data_exchange_routing_spark.lake.staging import DEST_COL, promote_map_keys, stage_multicast_delta
 from data_exchange_routing_spark.lake.table import (
     BUCKET_COL,
     DELETED_COL,
@@ -86,6 +87,7 @@ STANDARD_META_KEYS = {
 }
 
 _PROMOTE_LOCK = threading.Lock()
+OPEN_META_COL = "_open_meta"  # see _staged_columns
 
 
 class Warehouse:
@@ -494,11 +496,6 @@ class Warehouse:
     def _promote_registry_path(self) -> str:
         return os.path.join(self.root, "_checkpoints", "promoted_meta_keys.json")
 
-    def has_promote_registry(self) -> bool:
-        """False only before the first epoch's cold pre-scan; an empty
-        registry file still means "scanned, nothing to promote"."""
-        return os.path.exists(self._promote_registry_path())
-
     def known_promote_keys(self) -> list[str]:
         try:
             with open(self._promote_registry_path()) as f:
@@ -513,22 +510,6 @@ class Warehouse:
             merged = sorted(set(self.known_promote_keys()) | set(keys))
             _atomic_replace_json(self._promote_registry_path(), merged)
             return merged
-
-
-def detect_promotable_meta_keys(df: DataFrame) -> list[str]:
-    """Open-world metadata -> additive schema evolution: any non-standard key
-    appearing in the batch becomes a top-level nullable string column
-    (reference open-world enrichment, RouteIngestedFile.kt:196-209; tolerant
-    parsing, dtos/AzureBlobCreateEventMesage.kt:3).
-
-    Standalone one-job variant for ad-hoc callers; the replay hot path does
-    NOT run this extra pass — it piggybacks an Observation on the staging
-    write and keeps a warehouse-level key registry (see apply_epoch)."""
-    keys = [
-        r[0]
-        for r in df.select(F.explode(F.map_keys(F.col("meta"))).alias("k")).distinct().collect()
-    ]
-    return sorted(k for k in keys if k not in STANDARD_META_KEYS)
 
 
 def project_events(events: DataFrame, route_config: DataFrame) -> DataFrame:
@@ -548,9 +529,14 @@ def project_events(events: DataFrame, route_config: DataFrame) -> DataFrame:
 
 def _staged_columns(promote: list[str]) -> list:
     """The staged write's columns over ``project_events`` output. Live rows
-    carry the delta columns; dead rows carry only url, warc_ts, meta and
-    their dead-letter lsn/error/stage, the other columns null."""
+    carry the delta columns, one column per ``promote`` key and, in
+    ``OPEN_META_COL``, their other non-standard meta keys (null when none
+    is left: always, once the registry knows every key); dead rows carry
+    only url, warc_ts, meta and their dead-letter lsn/error/stage, the
+    other columns null."""
     live = F.col("error").isNull()
+    skip = sorted(STANDARD_META_KEYS | set(promote))
+    open_meta = F.map_filter(F.col("meta"), lambda k, _: ~k.isin(*skip))
     return [
         F.col(DEST_COL),
         F.col("url"),
@@ -560,8 +546,9 @@ def _staged_columns(promote: list[str]) -> list:
         F.when(live, F.col("lsn")).alias(LSN_COL),
         F.when(live, F.col("op") == "D").alias(DELETED_COL),
         *[F.when(live, F.col("meta").getItem(k)).alias(k) for k in promote],
-        # meta rides along for the observation + dead-letter rows; the
-        # fused op nulls it for delta rows
+        F.when(live & (F.size(open_meta) > 0), open_meta).alias(OPEN_META_COL),
+        # meta rides along for the dead-letter rows; the fused op nulls it
+        # for delta rows
         F.col("meta"),
         F.when(~live, F.col("lsn").cast("long")).alias("lsn"),
         F.col("error"),
@@ -608,8 +595,7 @@ def apply_epoch(
     epoch (crash replay, at-least-once redelivery of the whole batch) is a
     no-op thanks to per-table epoch guards.
 
-    ONE full-batch Spark action per epoch in steady state, reading each
-    event once:
+    ONE full-batch Spark action per epoch, reading each event once:
       1. one projection (``project_events``) validates, enriches and routes
          every row: a routed row gets its destination (one row per valid
          route), a failing row gets destination 'dead_letter' plus its
@@ -617,115 +603,46 @@ def apply_epoch(
       2. the fused multicast write over that projection: ONE shuffle keyed
          (destination, bucket) -> partition-local sort -> last-writer-wins
          dedup per (destination, url) and text extraction in ONE Arrow pass
-         -> staged parquet, dead-letter rows included. Promotable meta keys
-         come from the warehouse registry; an Observation on the write
-         verifies them for free, and only an epoch that introduces a
-         never-before-seen key pays a second staging pass (then the
-         registry absorbs it for all later epochs). A fresh warehouse seeds
-         the registry with one metadata-only pre-scan first.
-      3. per-table manifest commits run CONCURRENTLY, metadata-only (no
+         -> staged parquet, dead-letter rows included. Dead letters are NOT
+         deduplicated: at-least-once dead-lettering, like the reference.
+      3. late meta keys (those the registry lacks, staged in
+         ``OPEN_META_COL``) become columns on the driver: only the staged
+         files that carry one are rewritten (every live file of a fresh
+         warehouse's first epoch, else none unless a key is new), and the
+         registry absorbs the keys for later epochs. No Spark job.
+      4. per-table manifest commits run CONCURRENTLY, metadata-only (no
          Spark job); lineage rows come from parquet footer stats gathered
          during staging (no extra scan).
     """
-    import shutil
     import uuid as _uuid
-    from concurrent.futures import ThreadPoolExecutor
     from datetime import datetime, timezone
-
-    from pyspark.sql import Observation
 
     t0 = time.time()
     if route_config is None:
         route_config = default_route_config(wh.spark)
 
-    # No .persist(): the batch is re-derived from columnar parquet if a
-    # second pass is ever needed. Vectorized re-scan + predicate pushdown is
-    # cheaper than materializing ~GB of deserialized JVM row objects and
-    # paying the GC tax — measured 2x on local[32].
-    projected = project_events(events, route_config)
-    live = projected.filter(F.col(DEST_COL) != DEAD_LETTER_DEST)
-
-    def build_and_stage(promote: list[str], attempt: int):
-        """Fused multicast delta: ONE (dest, bucket) exchange +
-        partition-local sort; last-writer-wins dedup and text extraction
-        happen together in a single Arrow pass
-        (operators/dedup.py:fused_local_dedup_extract), and the write needs
-        no second repartition. Dead letters ride the SAME staged write
-        under the pseudo-destination 'dead_letter' and are NOT
-        deduplicated — at-least-once dead-lettering, like the reference."""
-        obs = Observation(f"meta-keys-{epoch_id}-{attempt}-{_uuid.uuid4().hex[:6]}")
-        staged_input = projected.select(*_staged_columns(promote))
-        # distinct meta keys collected DURING the write — no extra pass.
-        # Observed pre-dedup: a superset only when a dropped duplicate
-        # carried a key its surviving revision lacks — harmless (extra
-        # all-null column). collect_SET of the per-row key-arrays, not
-        # collect_list: the set dedups to the distinct key-combinations
-        # executor-side, so the driver merge is O(combos) not O(rows). The
-        # list variant shipped one array per row to the driver and merged
-        # them single-threaded on the DAGScheduler event loop — measured
-        # 8 s of post-task stage stall per epoch at 406k rows.
-        staged_input = staged_input.observe(
-            obs,
-            F.array_distinct(
-                F.flatten(
-                    F.collect_set(
-                        F.when(
-                            F.col(DEST_COL) != DEAD_LETTER_DEST,
-                            F.map_keys(F.col("meta")),
-                        )
-                    )
-                )
-            ).alias("keys"),
-        )
-        fused = fused_local_dedup_extract(
-            staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL
-        )
-        keep = {"url", "warc_ts", "html", "text", "lang", LSN_COL, DELETED_COL} | set(
-            promote
-        )
-        delta_schema = T.StructType([f for f in fused.schema.fields if f.name in keep])
-        staging = os.path.join(
-            wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}"
-        )
-        _mark_staging_inflight(staging)
-        entries = stage_multicast_delta(
-            fused, staging, wh.n_buckets, pre_partitioned=True
-        )
-        try:
-            raw = obs.get["keys"] or []
-        except Exception:
-            # an all-empty batch can optimize the CollectMetrics node away
-            # (metrics row then fails Py4J conversion); fall back to the
-            # explicit one-job detection — trivially cheap on such batches
-            raw = detect_promotable_meta_keys(live)
-        observed = sorted(k for k in raw if k not in STANDARD_META_KEYS)
-        return delta_schema, entries, observed, staging
-
-    if wh.has_promote_registry():
-        promote = wh.known_promote_keys()
-    else:
-        # Cold registry (fresh warehouse): ONE cheap pre-scan of the
-        # projection's live rows' meta keys (map_keys + distinct — html is
-        # pruned from the scan, no payload shuffle) seeds the registry up
-        # front. Without it the epoch observes every key as
-        # never-before-seen and pays the FULL second staging pass
-        # (re-parse + re-shuffle + re-extract of the whole batch). The live
-        # rows are post-enrichment/post-routing (where route-config
-        # metadata lands) and pre-dedup — the same key set the staging
-        # Observation measures. The registry file is written even when the
-        # seed is empty, so the scan runs only until the first epoch has
-        # written the registry; a genuinely-new key arriving later still
-        # takes the second-pass path below.
-        promote = wh.register_promote_keys(detect_promotable_meta_keys(live))
-    delta_schema, entries_by_dest, observed, staging = build_and_stage(promote, 0)
-    new_keys = [k for k in observed if k not in promote]
-    if new_keys:
-        # rare: this epoch introduces brand-new meta keys — register them
-        # and re-stage once so their values land as top-level columns
-        promote = wh.register_promote_keys(observed)
-        shutil.rmtree(staging, ignore_errors=True)
-        _clear_staging_inflight(staging)
-        delta_schema, entries_by_dest, _, staging = build_and_stage(promote, 1)
+    promote = wh.known_promote_keys()
+    staged_input = project_events(events, route_config).select(*_staged_columns(promote))
+    # ONE (dest, bucket) exchange + partition-local sort; dedup and
+    # extraction in a single Arrow pass (operators/dedup.py), and the write
+    # needs no second repartition
+    fused = fused_local_dedup_extract(
+        staged_input, wh.n_buckets, dest_col=DEST_COL, bucket_col=BUCKET_COL
+    )
+    staging = os.path.join(wh.root, "_staging", f"epoch-{epoch_id:08d}-{_uuid.uuid4().hex[:8]}")
+    _mark_staging_inflight(staging)
+    entries_by_dest = stage_multicast_delta(fused, staging, wh.n_buckets, pre_partitioned=True)
+    late = promote_map_keys(
+        [e for dest, es in entries_by_dest.items() if dest != DEAD_LETTER_DEST for e in es],
+        OPEN_META_COL,
+    )
+    if late:
+        wh.register_promote_keys(late)
+    keep = {"url", "warc_ts", "html", "text", "lang", LSN_COL, DELETED_COL, *promote}
+    delta_schema = T.StructType(
+        [f for f in fused.schema.fields if f.name in keep]
+        + [T.StructField(k, T.StringType(), True) for k in late]
+    )
 
     # staging is complete; commits start now — refresh the in-flight
     # marker so the vacuum age gate sees activity even after a
@@ -735,7 +652,7 @@ def apply_epoch(
     stats: dict = {
         "epoch_id": epoch_id,
         "destinations": {},
-        "promoted_columns": promote,
+        "promoted_columns": sorted(promote + late),
     }
 
     lineage_rows = []
@@ -817,15 +734,25 @@ def replay(
     segments — so a replay over a live WAL never applies (and marks done) a
     half-copied segment.
     """
-    spark = wh.spark
+    done, todo = _pending_epochs(wh, events_dir, from_epoch, stop_after_epoch)
+    applied = _apply_epochs(wh, events_dir, todo, compact_every, max_concurrent_epochs)
+    return {"applied_epochs": sorted(applied), "skipped_epochs": sorted(done)}
+
+
+def _pending_epochs(
+    wh: Warehouse,
+    events_dir: str,
+    from_epoch: int | None = None,
+    stop_after_epoch: int | None = None,
+) -> tuple[set[int], list[int]]:
+    """Replay's bookkeeping, shared with the binlog tail: create missing
+    tables, vouch past a truncated prefix, refuse a log truncated past
+    unapplied epochs, and list the ready epochs not yet done. Returns
+    (done, todo), todo oldest first."""
+    from data_exchange_routing_spark.sources.pyds import ready_epochs, truncated_before
+
     wh.init_tables()
     start = from_epoch if from_epoch is not None else 0
-    from data_exchange_routing_spark.sources.pyds import (
-        ready_epochs,
-        segment_schema,
-        truncated_before,
-    )
-
     floor = truncated_before(events_dir)
     # The vouch floor is min(from_epoch, WAL truncation point): a
     # bootstrapped consumer (from_epoch at a truncated position) vouches
@@ -855,19 +782,30 @@ def replay(
         and (from_epoch is None or e >= from_epoch)
         and (stop_after_epoch is None or e <= stop_after_epoch)
     ]
+    return done, todo
+
+
+def _apply_epochs(
+    wh: Warehouse,
+    events_dir: str,
+    todo: list[int],
+    compact_every: int | None = None,
+    max_concurrent_epochs: int = 4,
+) -> list[int]:
+    """Apply the segments ``todo`` lists, concurrently up to
+    ``max_concurrent_epochs`` (see ``replay``); returns them."""
+    from data_exchange_routing_spark.sources.pyds import segment_schema
 
     def run_one(e: int) -> int:
         # the schema comes from one footer on the driver: inferring it would
         # cost a Spark job per epoch. A segment with no parquet file (an
         # empty producer batch) reads as an empty epoch of the log schema.
         schema = segment_schema(events_dir, e) or CHANGE_EVENTS
-        events = spark.read.schema(schema).parquet(
+        events = wh.spark.read.schema(schema).parquet(
             os.path.join(events_dir, f"epoch_hint={e}")
         )
         apply_epoch(wh, events, epoch_id=e)
         return e
-
-    from concurrent.futures import ThreadPoolExecutor
 
     applied: list[int] = []
     if compact_every:
@@ -881,7 +819,7 @@ def replay(
     else:
         with ThreadPoolExecutor(max_workers=max_concurrent_epochs) as ex:
             applied.extend(ex.map(run_one, todo))
-    return {"applied_epochs": sorted(applied), "skipped_epochs": sorted(done)}
+    return applied
 
 
 def applied_watermark(wh: Warehouse) -> int:
@@ -996,8 +934,6 @@ def reprocess_dead_letters(
     )
     events = wh.spark.read.parquet(events_dir).join(dl, "lsn", "semi")
     stats = apply_epoch(wh, events, epoch_id, route_config=route_config)
-    if stats.get("skipped"):
-        return stats
     # which of the retried lsns STILL fail under the new config? The same
     # projection the epoch staged (metadata-only columns, no text work).
     cfg = route_config if route_config is not None else default_route_config(wh.spark)
@@ -1073,7 +1009,7 @@ def maintain(
 
     ``staging_min_age_s`` (default 1 h; ``None`` opts out) runs the
     warehouse staging GC each cycle: unreferenced UNMARKED staging dirs
-    (completed redeliveries, abandoned re-stages) reclaim immediately;
+    (completed redeliveries) reclaim immediately;
     dirs whose ``.inflight`` marker survives (a crashed epoch attempt)
     reclaim only once older than this age — a live epoch's marker clears
     at commit, so the knob only paces crash cleanup.

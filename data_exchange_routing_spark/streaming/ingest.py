@@ -21,10 +21,11 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from data_exchange_routing_spark.pipeline import Warehouse, _apply_epochs, _pending_epochs
+
 # not called here: cdcbench/trace.py::install_wrappers patches this module's
 # ``apply_epoch`` attribute, so the name must stay importable from it
-from data_exchange_routing_spark.pipeline import Warehouse, apply_epoch, replay  # noqa: F401
-from data_exchange_routing_spark.sources.pyds import ready_epochs
+from data_exchange_routing_spark.pipeline import apply_epoch  # noqa: F401
 
 
 class AppliedTail:
@@ -72,14 +73,10 @@ def stream_ingest(
     # and a negative bound would count from the newest segment
     if max_epochs_per_batch is not None and max_epochs_per_batch < 1:
         raise ValueError("max_epochs_per_batch must be at least 1")
-    wh.init_tables()
-    done = wh.completed_epochs()
-    todo = [e for e in ready_epochs(events_dir) if e not in done]
-    todo = todo[:max_epochs_per_batch]
-    # replay applies exactly ``todo``: the ready epochs not yet done, up to
-    # the last one this call takes
-    out = replay(wh, events_dir, stop_after_epoch=todo[-1] if todo else -1)
-    return AppliedTail(out["applied_epochs"])
+    # replay's bookkeeping (truncation refusal included) and apply loop,
+    # each run once, over the oldest ``max_epochs_per_batch`` pending epochs
+    _, todo = _pending_epochs(wh, events_dir)
+    return AppliedTail(_apply_epochs(wh, events_dir, todo[:max_epochs_per_batch]))
 
 
 def stream_refresh_partitions(

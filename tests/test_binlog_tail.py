@@ -77,6 +77,39 @@ def test_bounded_tail_commits_one_wal_epoch_per_call(spark, tmp_path, log):
     assert "stream" not in _guards(wh)
 
 
+def test_tail_does_its_bookkeeping_once_per_call(spark, tmp_path, log, monkeypatch):
+    """A tail call creates missing tables, reads the lineage guard and lists
+    the WAL once each, whether it applies an epoch or finds nothing to do."""
+    from collections import Counter
+
+    from data_exchange_routing_spark.sources import pyds
+    from data_exchange_routing_spark.streaming import ingest
+
+    calls: Counter = Counter()
+
+    def counting(name, fn):
+        def inner(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+
+        return inner
+
+    monkeypatch.setattr(Warehouse, "init_tables", counting("init_tables", Warehouse.init_tables))
+    monkeypatch.setattr(
+        Warehouse, "completed_epochs", counting("completed_epochs", Warehouse.completed_epochs)
+    )
+    listing = counting("ready_epochs", pyds.ready_epochs)
+    monkeypatch.setattr(pyds, "ready_epochs", listing)
+    # counted too wherever the tail module binds the WAL listing itself
+    monkeypatch.setattr(ingest, "ready_epochs", listing, raising=False)
+    wal = _wal(tmp_path, log, epochs=(0,))
+    wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)
+    for applied in ([0], []):
+        calls.clear()
+        assert _tail(spark, wal, wh, tmp_path, bound=1).applied_epochs == applied
+        assert calls == {"init_tables": 1, "completed_epochs": 1, "ready_epochs": 1}
+
+
 def test_replay_of_a_tail_fed_warehouse_applies_nothing(spark, tmp_path, log):
     wal = _wal(tmp_path, log)
     wh = Warehouse(spark, str(tmp_path / "wh"), n_buckets=4)

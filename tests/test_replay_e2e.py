@@ -38,6 +38,22 @@ def _redeliver(spark, wh: Warehouse, events_dir: str, epoch: int) -> dict:
     return apply_epoch(wh, events, epoch_id=epoch)
 
 
+def _count_staging_passes(monkeypatch) -> list[int]:
+    """Record each ``pipeline.stage_multicast_delta`` call (one per staged
+    write) in the returned list."""
+    import data_exchange_routing_spark.pipeline as P
+
+    calls: list[int] = []
+    orig = P.stage_multicast_delta
+
+    def counting(*a, **k):
+        calls.append(1)
+        return orig(*a, **k)
+
+    monkeypatch.setattr(P, "stage_multicast_delta", counting)
+    return calls
+
+
 def _assert_state_equal(spark, wh: Warehouse, events_pdf: pd.DataFrame):
     expected = oracle_final_states(events_pdf)
     for dest in sorted(set(DESTINATION_TABLES)):
@@ -114,20 +130,11 @@ def test_epoch_applied_outside_replay_is_not_restaged(
     saw it finish (a crash right after its lineage commit): replay reads
     progress from the lineage guard, so it neither re-applies nor re-stages
     that epoch, and it keeps no per-epoch progress file of its own."""
-    import data_exchange_routing_spark.pipeline as P
-
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_precommitted"), n_buckets=8)
     wh.init_tables()
     _redeliver(spark, wh, events_dir, 0)
 
-    calls: list[int] = []
-    orig = P.stage_multicast_delta
-
-    def counting(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
-
-    monkeypatch.setattr(P, "stage_multicast_delta", counting)
+    calls = _count_staging_passes(monkeypatch)
     res = replay(wh, events_dir, stop_after_epoch=1, max_concurrent_epochs=1)
     assert res["applied_epochs"] == [1] and res["skipped_epochs"] == [0]
     assert len(calls) == 1, f"expected 1 staging pass (epoch 1 only), got {len(calls)}"
@@ -355,49 +362,29 @@ def test_staging_vacuum_reclaims_redelivery_leak(spark, events_dir, tmpdir_path)
 
 
 def test_cold_registry_single_staging_pass(spark, events_dir, tmpdir_path, monkeypatch):
-    """A fresh warehouse must NOT pay the second staging pass: the cold
-    promoted-key registry is seeded by the cheap pre-scan of the routed
-    batch, so pass 0 already carries the promoted columns (one
-    stage_multicast_delta call per epoch). A genuinely-new key arriving on
-    a WARM registry still re-stages (covered by the charset evolution
-    assertion in test_full_replay_matches_oracle: charset appears in a late
-    epoch and lands as a column)."""
-    import data_exchange_routing_spark.pipeline as P
-
-    calls: list[int] = []
-    orig = P.stage_multicast_delta
-
-    def counting(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
-
-    monkeypatch.setattr(P, "stage_multicast_delta", counting)
+    """A fresh warehouse stages each epoch once (one stage_multicast_delta
+    call per epoch): the cold registry knows no key, so the keys the staged
+    files carry are promoted on the driver by rewriting those files, and
+    the registry absorbs them. A genuinely-new key arriving on a WARM
+    registry takes the same path (test_late_key_rewrites_only_its_files)."""
+    calls = _count_staging_passes(monkeypatch)
     wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_coldpass"), n_buckets=8)
     res = replay(wh, events_dir, stop_after_epoch=1, max_concurrent_epochs=2)
     assert res["applied_epochs"] == [0, 1]
-    # epochs 0-1 of this generator introduce no post-registry keys beyond the
-    # pre-scan seed: exactly one staged write per epoch
+    # one staged write per epoch, whatever the registry held
     assert len(calls) == 2, f"expected 2 staging passes (1/epoch), got {len(calls)}"
     assert wh.known_promote_keys() != []
 
 
-def test_empty_registry_prescans_once(spark, tmpdir_path, monkeypatch):
-    """A warehouse whose batches carry no promotable meta key runs the cold
-    pre-scan once, not once per epoch: the empty registry is written after
-    the first scan and counts as warm."""
+def test_no_promotable_key_stages_once_and_rewrites_nothing(spark, tmpdir_path, monkeypatch):
+    """A warehouse whose batches carry no promotable meta key stages each
+    epoch once, rewrites no staged file and promotes no column."""
     import data_exchange_routing_spark.pipeline as P
     from data_exchange_routing_spark.schemas import ROUTE_CONFIG
     from data_exchange_routing_spark.sources.configs import DEFAULT_ROUTES
     from data_exchange_routing_spark.sources.datagen import generate_change_events
 
-    calls: list[int] = []
-    orig = P.detect_promotable_meta_keys
-
-    def counting(df):
-        calls.append(1)
-        return orig(df)
-
-    monkeypatch.setattr(P, "detect_promotable_meta_keys", counting)
+    calls = _count_staging_passes(monkeypatch)
     no_extra_meta = spark.createDataFrame(
         [
             {
@@ -417,5 +404,107 @@ def test_empty_registry_prescans_once(spark, tmpdir_path, monkeypatch):
     for epoch in (0, 1):
         stats = P.apply_epoch(wh, events, epoch_id=epoch, route_config=no_extra_meta)
         assert stats["promoted_columns"] == []
-    assert len(calls) == 1, f"expected one cold pre-scan, got {len(calls)}"
+    assert len(calls) == 2, f"expected one staging pass per epoch, got {len(calls)}"
     assert wh.known_promote_keys() == []
+    # every staged file is as the Spark write left it: its open-meta column
+    # (all null) is still there, so none was rewritten
+    files = [f for d in DESTINATION_TABLES for f in _file_schemas(wh, d).values()]
+    assert files and all(P.OPEN_META_COL in names for names in files)
+
+
+def _file_schemas(wh: Warehouse, name: str) -> dict[str, list[str]]:
+    """{absolute path: column names} of a table's current data files."""
+    import pyarrow.parquet as pq
+
+    t = wh.table(name)
+    paths = [os.path.normpath(os.path.join(t.path, f["path"])) for f in t.snapshot().files]
+    return {p: pq.read_schema(p).names for p in paths}
+
+
+def test_late_key_rewrites_only_its_files(spark, events_dir, events_pdf, tmpdir_path, monkeypatch):
+    """A key the registry has never seen (``charset``, from epoch 3 of the
+    generator on) costs no second staging pass: epoch 3 stages once, and
+    only its own staged files whose live rows carry the key are rewritten
+    with the new column, which reads back with the oracle's values."""
+    import pyarrow.parquet as pq
+
+    import data_exchange_routing_spark.pipeline as P
+    from data_exchange_routing_spark.sources.datagen import EVOLUTION_EPOCH
+
+    assert EVOLUTION_EPOCH == 3
+    wh = Warehouse(spark, os.path.join(tmpdir_path, "wh_late_key"), n_buckets=8)
+    replay(wh, events_dir, stop_after_epoch=2)
+    assert "charset" not in wh.known_promote_keys()
+    tables = sorted(set(DESTINATION_TABLES)) + ["dead_letter"]
+    before = {}
+    for name in tables:
+        for p in _file_schemas(wh, name):
+            st = os.stat(p)
+            before[p] = (st.st_size, st.st_mtime_ns)
+
+    calls = _count_staging_passes(monkeypatch)
+    stats = _redeliver(spark, wh, events_dir, 3)
+    assert len(calls) == 1, f"expected 1 staging pass, got {len(calls)}"
+    assert "charset" in stats["promoted_columns"]
+    assert "charset" in wh.known_promote_keys()
+    assert "charset" in wh.table("web_pages").snapshot().schema().fieldNames()
+    _assert_state_equal(spark, wh, events_pdf[events_pdf["epoch_hint"] <= 3])
+
+    # the files of epochs 0-2 are untouched
+    for p, was in before.items():
+        st = os.stat(p)
+        assert (st.st_size, st.st_mtime_ns) == was, f"{p} rewritten"
+    # epoch 3's staged files: rewritten (open-meta column replaced by the
+    # charset column) exactly where live rows carry charset
+    rewritten, kept = [], []
+    for name in tables:
+        for p, names in _file_schemas(wh, name).items():
+            if p in before:
+                continue
+            carries = (
+                name != "dead_letter"
+                and "charset" in names
+                and pq.read_table(p, columns=["charset"]).column(0).null_count
+                < pq.ParquetFile(p).metadata.num_rows
+            )
+            assert (P.OPEN_META_COL not in names) == carries, (name, p, names)
+            if not carries:
+                open_meta = pq.read_table(p, columns=[P.OPEN_META_COL]).column(0)
+                assert open_meta.null_count == len(open_meta), p
+            (rewritten if carries else kept).append(p)
+    assert rewritten and kept
+    # a rewrite keeps every other column's type (timestamps included) and
+    # the codec of the Spark write it came from
+    def layout(p, drop):
+        f = pq.ParquetFile(p)
+        cols = [c for c in f.schema_arrow if c.name != drop]
+        return cols, f.metadata.row_group(0).column(0).compression
+
+    assert all(layout(p, "charset") == layout(kept[0], P.OPEN_META_COL) for p in rewritten)
+
+
+def test_apply_epoch_stages_once_by_construction():
+    """Spark-free guard: ``apply_epoch`` has one staging call site, and
+    ``pipeline.py`` keeps no second mechanism to decide promoted columns
+    (no staging Observation, no pre-scan of the batch's meta keys)."""
+    import ast
+    import inspect
+
+    import data_exchange_routing_spark.pipeline as P
+
+    tree = ast.parse(inspect.getsource(P))
+    fn = next(
+        n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "apply_epoch"
+    )
+    stage_calls = [
+        n
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Call)
+        and getattr(n.func, "id", getattr(n.func, "attr", None)) == "stage_multicast_delta"
+    ]
+    assert len(stage_calls) == 1
+    names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    names |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+    names |= {a.name for n in ast.walk(tree) if isinstance(n, ast.ImportFrom) for a in n.names}
+    names |= {n.name for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    assert not names & {"Observation", "detect_promotable_meta_keys"}
